@@ -460,6 +460,7 @@ def q_bucketed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources.py — the persisted co-location layout; Iceberg spec at
     deploy), read it back, and aggregate. Shares degree_distribution's
     oracle, so the persisted bytes are hash-checked end to end."""
+    import shutil
     import tempfile
 
     from landscape_spark import sources
@@ -467,18 +468,24 @@ def q_bucketed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = linkgraph.directed_edges(spark, sf_dir)
     # per-run unique dir: a fixed path in the shared tmp dir races with a
     # concurrent gate run on the same host (overwrite mid-read) and could
-    # follow a pre-existing attacker-created path in world-writable /tmp
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="landscape_gate_edge_table_"), "edges"
-    )
-    sources.write_edge_table(e, path)
-    back = sources.read_edge_table(spark, path)
-    return (
-        back.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .groupBy("out_deg")
-        .agg(F.count(F.lit(1)).alias("n_vertices"))
-    )
+    # follow a pre-existing attacker-created path in world-writable /tmp.
+    # The (small) degree histogram is materialized before the dir is
+    # removed, so no run leaves an edge-table copy behind.
+    tmp = tempfile.mkdtemp(prefix="landscape_gate_edge_table_")
+    try:
+        path = os.path.join(tmp, "edges")
+        sources.write_edge_table(e, path)
+        hist = (
+            sources.read_edge_table(spark, path)
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).alias("out_deg"))
+            .groupBy("out_deg")
+            .agg(F.count(F.lit(1)).alias("n_vertices"))
+        )
+        rows = hist.collect()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return spark.createDataFrame(rows, hist.schema)
 
 
 def q_degree_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -109,3 +109,115 @@ def test_pagerank_csr_blocked_all_dangling_uniform(spark):
     got = {r.v: r.pr_score for r in pagerank_csr_blocked(spark, empty, 10, iters=5, shards=3).collect()}
     assert len(got) == 10
     assert all(abs(v - 0.1) < 1e-12 for v in got.values())
+
+
+def _persistent_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def _graph(spark, sf):
+    return linkgraph.num_vertices(spark, sf), linkgraph.directed_edges(spark, sf)
+
+
+def _caller_blocks(e, n):
+    from landscape_spark.graph.csr import build_blocked_csr
+
+    blk = tuple(df.persist() for df in build_blocked_csr(e, n, shards=4, num_partitions=4))
+    for df in blk:
+        df.count()
+    return blk
+
+
+def test_pagerank_csr_blocked_keeps_caller_caches(spark, sf_small):
+    """blocks= stays the caller's: both cached frames it passed are still
+    cached after the call (the operator only drops what it created)."""
+    from pyspark import StorageLevel
+
+    from landscape_spark.graph.csr import pagerank_csr_blocked
+
+    n, e = _graph(spark, sf_small)
+    blk = _caller_blocks(e, n)
+    try:
+        pagerank_csr_blocked(spark, e, n, iters=2, shards=4, num_partitions=4, blocks=blk).collect()
+        assert all(df.storageLevel != StorageLevel.NONE for df in blk)
+    finally:
+        for df in blk:
+            df.unpersist()
+
+
+def test_csr_pageranks_release_what_they_create(spark, sf_small):
+    """After each CSR PageRank the persistent-RDD count is back to its entry
+    value, plus at most the one rank state the returned frame reads."""
+    from landscape_spark.graph.csr import pagerank_csr_blocked
+
+    n, e = _graph(spark, sf_small)
+    entry = _persistent_rdds(spark)
+    pagerank_csr_blocked(spark, e, n, iters=3, shards=4, num_partitions=4).collect()
+    assert _persistent_rdds(spark) <= entry + 1
+
+    blk = _caller_blocks(e, n)
+    try:
+        entry = _persistent_rdds(spark)
+        pagerank_csr_blocked(spark, e, n, iters=3, shards=4, num_partitions=4, blocks=blk).collect()
+        assert _persistent_rdds(spark) <= entry + 1
+    finally:
+        for df in blk:
+            df.unpersist()
+
+    entry = _persistent_rdds(spark)
+    pagerank_csr(spark, e, n, iters=3, num_partitions=4).collect()
+    assert _persistent_rdds(spark) <= entry + 1
+
+
+def _scopes(cluster) -> set[str]:
+    out = {cluster.name()}
+    children = cluster.childClusters()
+    for k in range(children.size()):
+        out |= _scopes(children.apply(k))
+    return out
+
+
+def _run_in_group(spark, group: str, fn) -> tuple[int, int]:
+    """(jobs, Python stages) that ``fn`` ran. A Python stage is a stage
+    that ran tasks through a MapInArrow operator."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    python = 0
+    for s in stages:
+        info = tracker.getStageInfo(s)
+        if info is not None and info.numCompletedTasks > 0:
+            graph = store.operationGraphForStage(s)
+            python += "MapInArrow" in _scopes(graph.rootCluster())
+    return len(jobs), python
+
+
+def test_pagerank_csr_blocked_round_shape(spark, sf_small):
+    """Round-shape pin: each extra iteration costs exactly 3 jobs (rank
+    shuffle, partial shuffle, checkpoint) and 2 Python stages (SpMV and
+    update); besides those only the pack runs Python — init, dangling
+    mass and emit stay in the JVM."""
+    from landscape_spark.graph.csr import pagerank_csr_blocked
+
+    n, e = _graph(spark, sf_small)
+    shape = {
+        iters: _run_in_group(
+            spark,
+            f"csr_blocked_shape_{iters}",
+            lambda: pagerank_csr_blocked(
+                spark, e, n, iters=iters, shards=4, num_partitions=4
+            ).collect(),
+        )
+        for iters in (1, 3)
+    }
+    (jobs1, py1), (jobs3, py3) = shape[1], shape[3]
+    assert jobs3 - jobs1 == 2 * 3, shape
+    assert jobs1 <= 8, shape  # pack + static cache (4), first iteration (2), collect (1)
+    assert py1 == 1 + 2 * 1 and py3 == 1 + 2 * 3, shape

@@ -186,8 +186,12 @@ def test_hits_and_ppr_no_vertex_sized_broadcast(spark, sf_small):
     # child is a Scan/Range would be the round-2 O(n)-broadcast bug class
     import re
 
-    for m in re.finditer(r"BroadcastExchange[^\n]*\n\s+\+- (\w+)", plan):
-        assert m.group(1) in {"HashAggregate", "SortAggregate"}, plan
+    # children may carry a whole-stage-codegen prefix ("+- *(3) HashAggregate");
+    # at least one broadcast must match, so the guard can never pass vacuously
+    children = re.findall(r"BroadcastExchange[^\n]*\n\s+\+- (?:\*\(\d+\) )?(\w+)", plan)
+    assert children, plan
+    for child in children:
+        assert child in {"HashAggregate", "SortAggregate"}, plan
     ppr = _plan(personalized_pagerank(e, verts, n, seeds=[0, 1], iters=1))
     assert "IdentityBroadcastMode" not in ppr, ppr
     assert "CartesianProduct" not in ppr, ppr
