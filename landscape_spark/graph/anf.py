@@ -36,7 +36,8 @@ idempotent max-merge, so there is no separate state-merge join. Registers
 are monotone non-decreasing, so the integer SUM of all registers is a
 strictly-increasing-until-fixpoint convergence certificate (the kcore.py
 trick); at the fixpoint N(h) = N(inf) exactly (the sketches stop
-changing when every ball stops growing). Lineage is cut every round.
+changing when every ball stops growing). Lineage is cut every round by a
+landscape_spark.rounds checkpoint that releases the one it replaces.
 """
 
 from __future__ import annotations
@@ -44,6 +45,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from landscape_spark.rounds import Rounds
 
 
 def _alpha(m: int) -> float:
@@ -141,35 +144,34 @@ def neighborhood_function(
     # join (bit-identical registers). The relation is cached partitioned on
     # the join key so per-hop only the state frame moves (guide §2.4).
     p = local_parallelism(spark)
-    ep = (
-        edges.select("src", "dst")
-        .unionAll(vertices.select(F.col("v").alias("src"), F.col("v").alias("dst")))
-        .repartition(p, "dst")
-        .cache()
-    )
-    state = _init_registers(vertices, log2m, seed).localCheckpoint(eager=True)
-    prev_cert, est0 = _round_stats(state)
-    est = [(0, est0)]
     elem_max = [
         F.max(F.element_at(F.col("regs"), i + 1)).alias(f"_m{i}") for i in range(m)
     ]
-    for h in range(1, max_h + 1):
-        state = (
-            ep.join(state.withColumnRenamed("v", "dst"), on="dst")
-            .groupBy(F.col("src").alias("v"))
-            .agg(*elem_max)
-            .select("v", F.array(*[F.col(f"_m{i}") for i in range(m)]).alias("regs"))
-            .localCheckpoint(eager=True)
+    with Rounds() as r:
+        ep = r.cache(
+            edges.select("src", "dst")
+            .unionAll(vertices.select(F.col("v").alias("src"), F.col("v").alias("dst")))
+            .repartition(p, "dst")
         )
-        cert, est_h = _round_stats(state)
-        est.append((h, est_h))
-        if cert == prev_cert:
-            # max-merge is idempotent: unchanged registers => every ball
-            # is stable => N(h) = N(inf); drop the duplicate last row
-            est.pop()
-            break
-        prev_cert = cert
-    ep.unpersist()
+        state = r.checkpoint(_init_registers(vertices, log2m, seed))
+        prev_cert, est0 = _round_stats(state)
+        est = [(0, est0)]
+        for h in range(1, max_h + 1):
+            state = r.checkpoint(
+                ep.join(state.withColumnRenamed("v", "dst"), on="dst")
+                .groupBy(F.col("src").alias("v"))
+                .agg(*elem_max)
+                .select("v", F.array(*[F.col(f"_m{i}") for i in range(m)]).alias("regs")),
+                replaces=state,
+            )
+            cert, est_h = _round_stats(state)
+            est.append((h, est_h))
+            if cert == prev_cert:
+                # max-merge is idempotent: unchanged registers => every ball
+                # is stable => N(h) = N(inf); drop the duplicate last row
+                est.pop()
+                break
+            prev_cert = cert
     return spark.createDataFrame(
         [(h, round(v, 6)) for h, v in est], "h int, n_pairs_est double"
     )
@@ -249,63 +251,61 @@ def harmonic_centrality(
     # (prev_est, hc) accumulator through the SAME aggregate, replacing the
     # old per-hop n-row merge join.
     p = local_parallelism(edges.sparkSession)
-    ep = (
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .unionAll(vertices.select(F.col("v").alias("src"), F.col("v").alias("dst")))
-        .repartition(p, "dst")
-        .cache()
-    )
-    from pyspark.sql import Observation
-
-    # the fixpoint certificate (INTEGER register sum — exact under any task
-    # merge order) rides each checkpoint action via observe(): no separate
-    # per-hop certificate job. (neighborhood_function keeps its combined
-    # cert+estimate job instead: the published estimate is a FLOAT sum, and
-    # observe() merges task metrics in completion order, which would make
-    # the published value run-order-dependent at the last ulp.)
-    obs0 = Observation()
-    state = (
-        _init_registers(vertices, log2m, seed)
-        .select("v", "regs", est.alias("prev_est"), F.lit(0.0).alias("hc"))
-        .observe(obs0, F.sum(reg_sum).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    prev_cert = obs0.get["s"]
     elem_max = [
         F.max(F.element_at(F.col("regs"), i + 1)).alias(f"_m{i}") for i in range(m)
     ]
     self_row = F.col("dst") == F.col("src")
-    for h in range(1, max_h + 1):
-        merged = (
-            ep.join(state.withColumnRenamed("v", "dst"), on="dst")
-            .groupBy(F.col("src").alias("v"))
-            .agg(
-                *elem_max,
-                # exactly one self row per group carries the accumulator
-                F.max(F.when(self_row, F.col("prev_est"))).alias("prev_est"),
-                F.max(F.when(self_row, F.col("hc"))).alias("hc"),
-            )
-            .select(
-                "v",
-                F.array(*[F.col(f"_m{i}") for i in range(m)]).alias("regs"),
-                "prev_est",
-                "hc",
-            )
+    with Rounds() as r:
+        ep = r.cache(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            .unionAll(vertices.select(F.col("v").alias("src"), F.col("v").alias("dst")))
+            .repartition(p, "dst")
         )
-        obs = Observation()
-        state = merged.select(
-            "v",
-            "regs",
-            est.alias("prev_est"),
-            # ball growth at this hop, each new member at distance exactly h
-            (
-                F.col("hc")
-                + F.greatest(est - F.col("prev_est"), F.lit(0.0)) / F.lit(float(h))
-            ).alias("hc"),
-        ).observe(obs, F.sum(reg_sum).alias("s")).localCheckpoint(eager=True)
-        cert = obs.get["s"]
-        if cert == prev_cert:
-            break
-        prev_cert = cert
-    ep.unpersist()
-    return state.select("v", F.round("hc", 6).alias("harmonic"))
+        # the fixpoint certificate (INTEGER register sum — exact under any
+        # task merge order) rides each checkpoint action: no separate
+        # per-hop certificate job. (neighborhood_function keeps its combined
+        # cert+estimate job instead: the published estimate is a FLOAT sum,
+        # and observe() merges task metrics in completion order, which would
+        # make the published value run-order-dependent at the last ulp.)
+        state, mt = r.observe(
+            _init_registers(vertices, log2m, seed).select(
+                "v", "regs", est.alias("prev_est"), F.lit(0.0).alias("hc")
+            ),
+            s=F.sum(reg_sum),
+        )
+        for h in range(1, max_h + 1):
+            merged = (
+                ep.join(state.withColumnRenamed("v", "dst"), on="dst")
+                .groupBy(F.col("src").alias("v"))
+                .agg(
+                    *elem_max,
+                    # exactly one self row per group carries the accumulator
+                    F.max(F.when(self_row, F.col("prev_est"))).alias("prev_est"),
+                    F.max(F.when(self_row, F.col("hc"))).alias("hc"),
+                )
+                .select(
+                    "v",
+                    F.array(*[F.col(f"_m{i}") for i in range(m)]).alias("regs"),
+                    "prev_est",
+                    "hc",
+                )
+            )
+            prev_cert = mt["s"]
+            state, mt = r.observe(
+                merged.select(
+                    "v",
+                    "regs",
+                    est.alias("prev_est"),
+                    # ball growth at this hop, each new member at distance
+                    # exactly h
+                    (
+                        F.col("hc")
+                        + F.greatest(est - F.col("prev_est"), F.lit(0.0)) / F.lit(float(h))
+                    ).alias("hc"),
+                ),
+                replaces=state,
+                s=F.sum(reg_sum),
+            )
+            if mt["s"] == prev_cert:
+                break
+        return r.result(state.select("v", F.round("hc", 6).alias("harmonic")))

@@ -35,31 +35,35 @@ from pyspark.sql import functions as F
 
 from landscape_spark.graph.cc import connected_components_exact
 from landscape_spark.graph.scc import strongly_connected_components
+from landscape_spark.rounds import Rounds, warn_cap
 
 
-def _reachable(edges: DataFrame, seeds: DataFrame, max_iter: int = 512) -> DataFrame:
+def _reachable(
+    edges: DataFrame, seeds: DataFrame, max_iter: int = 512, parent: Rounds | None = None
+) -> DataFrame:
     """(v) reachable from the seed DataFrame along (src, dst) edges —
     seeds included. Frontier-synchronous: each edge fires once across the
-    run, when its src enters the reached set."""
-    from pyspark.sql import Observation
-
-    reached = seeds.select("v").distinct().localCheckpoint(eager=True)
-    frontier = reached
-    for _ in range(max_iter):
-        obs = Observation()
-        nxt = (
-            edges.join(frontier.withColumnRenamed("v", "src"), on="src")
-            .select(F.col("dst").alias("v"))
-            .distinct()
-            .join(reached, on="v", how="left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if obs.get["n"] == 0:
-            break
-        reached = reached.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return reached
+    run, when its src enters the reached set. Hitting ``max_iter`` while
+    the last round still reached new vertices raises a RuntimeWarning."""
+    with Rounds(parent) as r:
+        reached = r.checkpoint(seeds.select("v").distinct())
+        frontier, nxt = reached, None
+        for _ in range(max_iter):
+            nxt, m = r.observe(
+                edges.join(frontier.withColumnRenamed("v", "src"), on="src")
+                .select(F.col("dst").alias("v"))
+                .distinct()
+                .join(reached, on="v", how="left_anti"),
+                replaces=nxt,
+                n=F.count(F.lit(1)),
+            )
+            if m["n"] == 0:
+                break
+            reached = r.checkpoint(reached.unionAll(nxt), replaces=reached)
+            frontier = nxt
+        else:
+            warn_cap("bow-tie reachability", "max_iter", max_iter)
+        return r.result(reached)
 
 
 def bowtie_decomposition(
@@ -75,70 +79,70 @@ def bowtie_decomposition(
     from landscape_spark.session import local_parallelism
 
     p = local_parallelism(edges.sparkSession)
-    scc = strongly_connected_components(edges, vertices).localCheckpoint(eager=True)
-    # each orientation cached partitioned on the frontier-join key ONCE:
-    # the two sweeps per orientation then reuse the cached partitioning
-    # every round (only the frontier moves — guide §2.4)
-    e_fwd = edges.select("src", "dst").repartition(p, "src").cache()
-    e_bwd = (
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .repartition(p, "src")
-        .cache()
-    )
-    core_comp = (
-        scc.groupBy("comp")
-        .agg(F.count(F.lit(1)).alias("sz"))
-        .orderBy(F.desc("sz"), F.asc("comp"))
-        .limit(1)
-    )
-    core = (
-        scc.join(F.broadcast(core_comp.select("comp")), on="comp")
-        .select("v")
-        .localCheckpoint(eager=True)
-    )
-    # the sweeps (and the weak-CC run) are mutually independent given their
-    # seeds — overlap them so one sweep's straggler tail back-fills with the
-    # next sweep's tasks (guide §2.6; results are unchanged)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fut_fwd = pool.submit(_reachable, e_fwd, core)  # core + OUT
-        fut_bwd = pool.submit(_reachable, e_bwd, core)  # core + IN
-        fut_weak = pool.submit(connected_components_exact, und_edges, vertices)
-        fwd = fut_fwd.result()
-        bwd = fut_bwd.result()
-        in_set = bwd.join(core, on="v", how="left_anti").localCheckpoint(eager=True)
-        out_set = fwd.join(core, on="v", how="left_anti").localCheckpoint(eager=True)
-        # TUBE membership: reachable from IN and reaching OUT while outside
-        # core/IN/OUT. Seeds include IN/OUT themselves; the CASE order makes
-        # that harmless (IN/OUT/CORE win first).
-        fut_from_in = pool.submit(_reachable, e_fwd, in_set)
-        fut_to_out = pool.submit(_reachable, e_bwd, out_set)
-        from_in = fut_from_in.result()
-        to_out = fut_to_out.result()
-        weak = fut_weak.result()
-    e_fwd.unpersist()
-    e_bwd.unpersist()
-    core_weak = weak.join(core, on="v").select(
-        F.col("comp").alias("core_wcomp")
-    ).distinct()
-    return (
-        vertices.join(core.select("v", F.lit(1).alias("in_core")), "v", "left")
-        .join(fwd.select("v", F.lit(1).alias("fwd")), "v", "left")
-        .join(bwd.select("v", F.lit(1).alias("bwd")), "v", "left")
-        .join(from_in.select("v", F.lit(1).alias("from_in")), "v", "left")
-        .join(to_out.select("v", F.lit(1).alias("to_out")), "v", "left")
-        .join(weak, "v", "left")
-        .join(F.broadcast(core_weak), F.col("comp") == F.col("core_wcomp"), "left")
-        .select(
-            "v",
-            F.when(F.col("in_core").isNotNull(), F.lit("CORE"))
-            .when(F.col("bwd").isNotNull(), F.lit("IN"))
-            .when(F.col("fwd").isNotNull(), F.lit("OUT"))
-            .when(
-                F.col("from_in").isNotNull() & F.col("to_out").isNotNull(),
-                F.lit("TUBE"),
-            )
-            .when(F.col("core_wcomp").isNotNull(), F.lit("TENDRIL"))
-            .otherwise(F.lit("DISCONNECTED"))
-            .alias("region"),
+    with Rounds() as r:
+        scc = r.checkpoint(
+            r.adopt(strongly_connected_components(edges, vertices), edges, vertices)
         )
-    )
+        # each orientation cached partitioned on the frontier-join key ONCE:
+        # the two sweeps per orientation then reuse the cached partitioning
+        # every round (only the frontier moves — guide §2.4)
+        e_fwd = r.cache(edges.select("src", "dst").repartition(p, "src"))
+        e_bwd = r.cache(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")).repartition(p, "src")
+        )
+        core_comp = (
+            scc.groupBy("comp")
+            .agg(F.count(F.lit(1)).alias("sz"))
+            .orderBy(F.desc("sz"), F.asc("comp"))
+            .limit(1)
+        )
+        core = r.checkpoint(
+            scc.join(F.broadcast(core_comp.select("comp")), on="comp").select("v"),
+            replaces=scc,
+        )
+        # the sweeps (and the weak-CC run) are mutually independent given
+        # their seeds — overlap them so one sweep's straggler tail
+        # back-fills with the next sweep's tasks (guide §2.6; results are
+        # unchanged)
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            fut_fwd = pool.submit(_reachable, e_fwd, core, parent=r)  # core + OUT
+            fut_bwd = pool.submit(_reachable, e_bwd, core, parent=r)  # core + IN
+            fut_weak = pool.submit(connected_components_exact, und_edges, vertices)
+            fwd = fut_fwd.result()
+            bwd = fut_bwd.result()
+            in_set = r.checkpoint(bwd.join(core, on="v", how="left_anti"))
+            out_set = r.checkpoint(fwd.join(core, on="v", how="left_anti"))
+            # TUBE membership: reachable from IN and reaching OUT while
+            # outside core/IN/OUT. Seeds include IN/OUT themselves; the CASE
+            # order makes that harmless (IN/OUT/CORE win first).
+            fut_from_in = pool.submit(_reachable, e_fwd, in_set, parent=r)
+            fut_to_out = pool.submit(_reachable, e_bwd, out_set, parent=r)
+            from_in = fut_from_in.result()
+            to_out = fut_to_out.result()
+            weak = r.adopt(fut_weak.result(), und_edges, vertices)
+        r.release(in_set, out_set)
+        core_weak = weak.join(core, on="v").select(
+            F.col("comp").alias("core_wcomp")
+        ).distinct()
+        return r.result(
+            vertices.join(core.select("v", F.lit(1).alias("in_core")), "v", "left")
+            .join(fwd.select("v", F.lit(1).alias("fwd")), "v", "left")
+            .join(bwd.select("v", F.lit(1).alias("bwd")), "v", "left")
+            .join(from_in.select("v", F.lit(1).alias("from_in")), "v", "left")
+            .join(to_out.select("v", F.lit(1).alias("to_out")), "v", "left")
+            .join(weak, "v", "left")
+            .join(F.broadcast(core_weak), F.col("comp") == F.col("core_wcomp"), "left")
+            .select(
+                "v",
+                F.when(F.col("in_core").isNotNull(), F.lit("CORE"))
+                .when(F.col("bwd").isNotNull(), F.lit("IN"))
+                .when(F.col("fwd").isNotNull(), F.lit("OUT"))
+                .when(
+                    F.col("from_in").isNotNull() & F.col("to_out").isNotNull(),
+                    F.lit("TUBE"),
+                )
+                .when(F.col("core_wcomp").isNotNull(), F.lit("TENDRIL"))
+                .otherwise(F.lit("DISCONNECTED"))
+                .alias("region"),
+            )
+        )

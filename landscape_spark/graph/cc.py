@@ -13,8 +13,9 @@ the sum is a cheap O(1)-row convergence certificate — no count of changed
 rows, no extra join).
 
 Scale notes: each round is one shuffle (groupBy v). Rounds ~ graph diameter;
-web graphs are short-diameter so this terminates fast. Lineage is cut every
-round with localCheckpoint to keep plans O(1). Label messages with
+web graphs are short-diameter so this terminates fast. Every round is one
+landscape_spark.rounds checkpoint (lineage cut, plans O(1)) carrying the
+label sum, and releases the one it replaces. Label messages with
 comp >= receiver id are dropped before the shuffle (labels are monotone
 non-increasing and label(v) <= v, so such a message can never lower the
 receiver's label) — this halves message traffic.
@@ -24,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from landscape_spark.rounds import Rounds
 
 
 def symmetrize(und_edges: DataFrame) -> DataFrame:
@@ -51,58 +54,49 @@ def connected_components_exact(
     """
     import warnings
 
-    # cache the symmetrized adjacency: each round's message join re-reads
-    # it, and for gate callers the underlying edge relation is a lazy
-    # scan + explode + distinct that would otherwise re-execute per round.
-    # Deliberately NO repartition — the label side broadcasts while small
-    # and the message fan-out is linear, so a pinned exchange only adds an
-    # up-front shuffle (measured +0.2s at sf0.1 for zero per-round gain).
-    from pyspark.sql import Observation
-
-    sym = symmetrize(und_edges).cache()
-    # the certificate (INTEGER label sum — exact under any task merge
-    # order) rides each checkpoint action via observe(): no separate
-    # per-round O(n)-scan certificate job
-    obs0 = Observation()
-    labels = vertices.select("v", F.col("v").alias("comp"))
-    labels = labels.observe(obs0, F.sum("comp").alias("s")).localCheckpoint(
-        eager=True
-    )
-    prev_sum = obs0.get["s"]
-    converged = False
-    for _ in range(max_iter):
-        msgs = (
-            sym.join(labels, on="v")
-            .select(F.col("w").alias("v"), "comp")
-            # label(u) <= u, so a message with comp >= v can never lower
-            # v's label (label(v) <= v <= comp) — dropping them pre-shuffle
-            # halves message traffic without changing the fixpoint
-            .where(F.col("comp") < F.col("v"))
+    with Rounds() as r:
+        # cache the symmetrized adjacency: each round's message join re-reads
+        # it, and for gate callers the underlying edge relation is a lazy
+        # scan + explode + distinct that would otherwise re-execute per
+        # round. Deliberately NO repartition — the label side broadcasts
+        # while small and the message fan-out is linear, so a pinned
+        # exchange only adds an up-front shuffle (measured +0.2s at sf0.1
+        # for zero per-round gain).
+        sym = r.cache(symmetrize(und_edges))
+        # the certificate (INTEGER label sum — exact under any task merge
+        # order) rides each checkpoint action: no separate per-round
+        # O(n)-scan certificate job
+        labels, m = r.observe(
+            vertices.select("v", F.col("v").alias("comp")), s=F.sum("comp")
         )
-        obs = Observation()
-        labels = (
-            msgs.unionAll(labels)
-            .groupBy("v")
-            .agg(F.min("comp").alias("comp"))
-            .observe(obs, F.sum("comp").alias("s"))
-        )
-        labels = labels.localCheckpoint(eager=True)
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # labels were still decreasing when the round budget ran out — the
-        # returned map is WRONG for some vertices (this is the golden path
-        # the sketch CC is verified against; silence here would let a
-        # mislabeled run validate or falsify sketch results)
-        warnings.warn(
-            f"connected_components_exact did not converge within "
-            f"{max_iter} rounds (graph diameter exceeds the cap) — labels "
-            "are still decreasing; raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    sym.unpersist()  # labels are checkpointed — nothing below reads sym
-    return labels
+        for _ in range(max_iter):
+            msgs = (
+                sym.join(labels, on="v")
+                .select(F.col("w").alias("v"), "comp")
+                # label(u) <= u, so a message with comp >= v can never lower
+                # v's label (label(v) <= v <= comp) — dropping them
+                # pre-shuffle halves message traffic without changing the
+                # fixpoint
+                .where(F.col("comp") < F.col("v"))
+            )
+            prev_sum = m["s"]
+            labels, m = r.observe(
+                msgs.unionAll(labels).groupBy("v").agg(F.min("comp").alias("comp")),
+                replaces=labels,
+                s=F.sum("comp"),
+            )
+            if m["s"] == prev_sum:
+                break
+        else:
+            # labels were still decreasing when the round budget ran out —
+            # the returned map is WRONG for some vertices (this is the
+            # golden path the sketch CC is verified against; silence here
+            # would let a mislabeled run validate or falsify sketch results)
+            warnings.warn(
+                f"connected_components_exact did not converge within "
+                f"{max_iter} rounds (graph diameter exceeds the cap) — labels "
+                "are still decreasing; raise max_iter",
+                RuntimeWarning,
+                stacklevel=2,
+            )
+        return r.result(labels)

@@ -16,7 +16,7 @@ of the shard is dangling). Both engines drive ``_pack`` and ``spmv``:
   blocks (i = source shard, j = destination shard) in one Python stage
   partitioned by i. Each iteration is TWO Python stages in one pipeline:
   cached blocks join rank shards -> SpMV partials -> shuffle on j -> fold +
-  damping + dangling -> localCheckpoint. Each update task emits its shard's
+  damping + dangling -> checkpoint. Each update task emits its shard's
   dangling mass; the driver reads the S values off the checkpoint action
   (``observe``) and sums them in shard order, so no value depends on task
   order. Init and emit run in the JVM (rank shards are ``array<double>``).
@@ -31,8 +31,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from landscape_spark.rounds import Rounds
 
 # rows with j = NULL list one shard's sources in ``vids`` (no CSR arrays)
 BLOCKED_CSR_SCHEMA = "i int, j int, vids binary, indptr binary, indices binary, degs binary"
@@ -253,12 +255,6 @@ def build_blocked_csr(
     return blocks, start
 
 
-def _release(ckpt: DataFrame | None) -> None:
-    """Drop a localCheckpoint's blocks; the frame must not be read again."""
-    if ckpt is not None:
-        ckpt._jdf.queryExecution().logical().rdd().unpersist(False)
-
-
 def pagerank_csr_blocked(
     spark: SparkSession,
     edges: DataFrame,
@@ -278,7 +274,7 @@ def pagerank_csr_blocked(
     shard, p); partials shuffle on j with the shard's source lists; the
     update folds them in k order, applies damping and the dangling mass and
     emits (i, r, d), d being the new shard's dangling mass; the new state
-    localCheckpoints, releasing the one it replaces.
+    is one landscape_spark.rounds checkpoint, releasing the one it replaces.
 
     ``blocks`` takes a build_blocked_csr result so static-graph reruns skip
     the pack; the caller keeps ownership (nothing it passed is
@@ -288,19 +284,6 @@ def pagerank_csr_blocked(
     width = -(-n // S)
     p = min(num_partitions, S)
     blk, start = blocks if blocks is not None else build_blocked_csr(edges, n, S, num_partitions)
-
-    # ONE action caches the static side partitioned on the source shard (a
-    # localCheckpoint forgets that under AQE) with the start ranks, so the
-    # first join shuffles nothing and every shard gets an update row; the
-    # integer source count for the first dangling mass rides along.
-    n_src = Observation()
-    static = (
-        blk.unionByName(start, allowMissingColumns=True)
-        .repartition(p, "i")
-        .observe(n_src, F.sum(F.when(F.col("j").isNull(), F.octet_length("vids"))).alias("b"))
-        .persist()
-    )
-    cached = static.drop("r")
 
     def size_of(shard: int) -> int:
         return max(0, min(width, n - shard * width))
@@ -353,35 +336,40 @@ def pagerank_csr_blocked(
             "d": [float(r[~has_src[j]].sum()) for j, r in zip(js, rs)],
         })
 
-    ranks = static.where(F.col("r").isNotNull())
-    held = None  # the rank checkpoint this call owns
-    try:
-        static.write.format("noop").mode("overwrite").save()  # no count exchange
-        dang = (n - (n_src.get["b"] or 0) // 8) / n
+    with Rounds() as r:
+        # ONE action caches the static side partitioned on the source shard
+        # (a checkpoint forgets that under AQE) with the start ranks, so the
+        # first join shuffles nothing and every shard gets an update row;
+        # the integer source count for the first dangling mass rides along
+        # (a noop write: no count exchange).
+        static = r.cache(blk.unionByName(start, allowMissingColumns=True).repartition(p, "i"))
+        m = r.materialize(
+            static, b=F.sum(F.when(F.col("j").isNull(), F.octet_length("vids")))
+        )
+        dang = (n - (m["b"] or 0) // 8) / n
+        cached = static.drop("r")
+        ranks = static.where(F.col("r").isNotNull())
+        held = None  # the rank checkpoint this call owns
         for _ in range(iters):
             # hash the S rank rows, stream the cached blocks: never
             # broadcast-collect the packed graph
             partials = cached.join(ranks.select("i", "r").hint("shuffle_hash"), "i").mapInArrow(
                 spmv_fold, "j int, k int, p array<double>, srcs binary"
             )
-            obs = Observation()
-            nxt = (
-                partials.repartition(p, "j")
-                .mapInArrow(lambda it, d=dang: update(it, d), "i int, r array<double>, d double")
-                .observe(obs, F.collect_list(F.struct("i", "d")).alias("d"))
-                .localCheckpoint(eager=True)
+            held, m = r.observe(
+                partials.repartition(p, "j").mapInArrow(
+                    lambda it, d=dang: update(it, d), "i int, r array<double>, d double"
+                ),
+                replaces=held,
+                d=F.collect_list(F.struct("i", "d")),
             )
-            _release(held)
-            ranks = held = nxt
-            dang = sum(d for _, d in sorted(obs.get["d"]))  # shard order
-    except BaseException:
-        _release(held)
-        raise
-    finally:
-        static.unpersist()
+            ranks = held
+            dang = sum(d for _, d in sorted(m["d"]))  # shard order
 
-    # iters=0 reads the JVM start ranks, never the released static side
-    return (held if held is not None else start).select("i", F.posexplode("r")).select(
-        (F.col("i").cast("long") * width + F.col("pos")).alias("v"),
-        F.col("col").alias("pr_score"),
-    )
+        # iters=0 reads the JVM start ranks, never the released static side
+        return r.result(
+            (held if held is not None else start).select("i", F.posexplode("r")).select(
+                (F.col("i").cast("long") * width + F.col("pos")).alias("v"),
+                F.col("col").alias("pr_score"),
+            )
+        )

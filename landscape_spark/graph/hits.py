@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.rounds import Rounds
 from landscape_spark.session import local_parallelism
 
 
@@ -56,54 +57,53 @@ def hits(
     """
     spark = edges.sparkSession
     p = local_parallelism(spark)
-    e_src = edges.select("src", "dst").repartition(p, "src").cache()
-    e_dst = edges.select("src", "dst").repartition(p, "dst").cache()
-    e_src.count()
-    e_dst.count()
+    with Rounds() as r:
+        e_src = r.cache(edges.select("src", "dst").repartition(p, "src"))
+        e_dst = r.cache(edges.select("src", "dst").repartition(p, "dst"))
+        e_src.count()
+        e_dst.count()
 
-    hubs = vertices.select(
-        "v", F.lit(1.0 / float(n_vertices)).alias("s")
-    ).localCheckpoint(eager=True)
-    auth = hubs
+        hubs = r.checkpoint(vertices.select("v", F.lit(1.0 / float(n_vertices)).alias("s")))
+        auth = hubs
 
-    def _half_step(e: DataFrame, key: str, out: str, scores: DataFrame) -> DataFrame:
-        # raw(v) = sum of the other side's scores over edges incident at v.
-        # CHECKPOINTED before the norm: the 1-row L1 norm is a broadcast
-        # subquery Catalyst does not exchange-dedup against the main side,
-        # so an un-cut raw would execute its join+aggregate TWICE per
-        # half-step (once under the norm, once under the division).
-        raw = (
-            e.join(scores, F.col(key) == scores.v)
-            .select(F.col(out).alias("v"), F.col("s").alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint(eager=True)
+        def _half_step(
+            e: DataFrame, key: str, out: str, scores: DataFrame, prev: DataFrame
+        ) -> DataFrame:
+            # raw(v) = sum of the other side's scores over edges incident at
+            # v. CHECKPOINTED before the norm: the 1-row L1 norm is a
+            # broadcast subquery Catalyst does not exchange-dedup against
+            # the main side, so an un-cut raw would execute its
+            # join+aggregate TWICE per half-step (once under the norm, once
+            # under the division). The checkpoint replaces ``prev``'s.
+            raw = r.checkpoint(
+                e.join(scores, F.col(key) == scores.v)
+                .select(F.col(out).alias("v"), F.col("s").alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("c")),
+                replaces=prev,
+            )
+            norm = raw.agg(F.coalesce(F.sum("c"), F.lit(0.0)).alias("_n"))
+            # vertices with no incident edge on this orientation never appear
+            # in raw; their score is implicitly 0 — the next half-step's join
+            # drops them anyway, so the O(n) vertex left-join stays OUT of
+            # the loop and runs once on the final projection below.
+            return raw.crossJoin(F.broadcast(norm)).select(
+                "v",
+                F.when(F.col("_n") > 0, F.col("c") / F.col("_n"))
+                .otherwise(F.lit(0.0))
+                .alias("s"),
+            )
+
+        for _ in range(iters):
+            auth = _half_step(e_src, "src", "dst", hubs, auth)
+            hubs = _half_step(e_dst, "dst", "src", auth, hubs)
+
+        return r.result(
+            vertices.join(auth.select("v", F.col("s").alias("authority")), on="v", how="left")
+            .join(hubs.select("v", F.col("s").alias("hub")), on="v", how="left")
+            .select(
+                "v",
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+            )
         )
-        norm = raw.agg(F.coalesce(F.sum("c"), F.lit(0.0)).alias("_n"))
-        # vertices with no incident edge on this orientation never appear in
-        # raw; their score is implicitly 0 — the next half-step's join drops
-        # them anyway, so the O(n) vertex left-join stays OUT of the loop
-        # and runs once on the final projection below.
-        return raw.crossJoin(F.broadcast(norm)).select(
-            "v",
-            F.when(F.col("_n") > 0, F.col("c") / F.col("_n"))
-            .otherwise(F.lit(0.0))
-            .alias("s"),
-        )
-
-    for _ in range(iters):
-        auth = _half_step(e_src, "src", "dst", hubs)
-        hubs = _half_step(e_dst, "dst", "src", auth)
-
-    out = (
-        vertices.join(auth.select("v", F.col("s").alias("authority")), on="v", how="left")
-        .join(hubs.select("v", F.col("s").alias("hub")), on="v", how="left")
-        .select(
-            "v",
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-        )
-    )
-    e_src.unpersist()
-    e_dst.unpersist()
-    return out

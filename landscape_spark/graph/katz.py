@@ -20,7 +20,8 @@ Plan shape mirrors pagerank.py's join path:
   partitioning) + one map-side-combined groupBy(dst) + a left join onto
   the vertex frame — one real shuffle per iteration, no vertex-sized
   broadcast, no driver-side state;
-* lineage is cut with one eager localCheckpoint per iteration (the
+* lineage is cut with one eager checkpoint per iteration, a
+  landscape_spark.rounds round that releases the one it replaces (the
   score frame is referenced once per step, so plan growth is linear,
   but 10+ chained joins still deserve a cut — same discipline as HITS).
 """
@@ -30,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.rounds import Rounds
 from landscape_spark.session import local_parallelism
 
 
@@ -47,32 +49,28 @@ def katz_centrality(
     """
     spark = edges.sparkSession
     p = local_parallelism(spark)
-    e = edges.select("src", "dst").repartition(p, "src").cache()
-    e.count()
-
-    x = vertices.select("v", F.lit(float(beta)).alias("x")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(iters):
-        contrib = (
-            e.join(x, e.src == x.v)
-            .select(F.col("dst").alias("v"), F.col("x").alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("c"))
-        )
-        x = (
-            vertices.join(contrib, on="v", how="left")
-            .select(
-                "v",
-                (
-                    F.lit(float(beta))
-                    + F.lit(float(alpha)) * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("x"),
+    with Rounds() as r:
+        e = r.cache(edges.select("src", "dst").repartition(p, "src"))
+        e.count()
+        x = r.checkpoint(vertices.select("v", F.lit(float(beta)).alias("x")))
+        for _ in range(iters):
+            contrib = (
+                e.join(x, e.src == x.v)
+                .select(F.col("dst").alias("v"), F.col("x").alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("c"))
             )
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    return x.select("v", F.col("x").alias("katz"))
+            x = r.checkpoint(
+                vertices.join(contrib, on="v", how="left").select(
+                    "v",
+                    (
+                        F.lit(float(beta))
+                        + F.lit(float(alpha)) * F.coalesce(F.col("c"), F.lit(0.0))
+                    ).alias("x"),
+                ),
+                replaces=x,
+            )
+        return r.result(x.select("v", F.col("x").alias("katz")))
 
 
 def eigenvector_centrality(
@@ -91,34 +89,34 @@ def eigenvector_centrality(
     partitioned edges, one shuffle per iteration, 1-row broadcast norm."""
     spark = edges.sparkSession
     p = local_parallelism(spark)
-    e = edges.select("src", "dst").repartition(p, "src").cache()
-    e.count()
-    x = vertices.select(
-        "v", F.lit(1.0 / float(n_vertices)).alias("x")
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        # checkpoint the RAW aggregate BEFORE the norm (the hits.py fix):
-        # the 1-row norm is a broadcast scalar subquery Catalyst does not
-        # exchange-dedup against the main side, so an un-cut raw would run
-        # its join+aggregate twice per iteration. Vertices missing from raw
-        # hold score exactly 0.0 and contribute nothing to the next join —
-        # the O(n) vertex left-join happens once, below the loop.
-        raw = (
-            e.join(x, e.src == x.v)
-            .select(F.col("dst").alias("v"), F.col("x").alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("c"))
-            .localCheckpoint(eager=True)
+    with Rounds() as r:
+        e = r.cache(edges.select("src", "dst").repartition(p, "src"))
+        e.count()
+        x = r.checkpoint(vertices.select("v", F.lit(1.0 / float(n_vertices)).alias("x")))
+        for _ in range(iters):
+            # checkpoint the RAW aggregate BEFORE the norm (the hits.py
+            # fix): the 1-row norm is a broadcast scalar subquery Catalyst
+            # does not exchange-dedup against the main side, so an un-cut
+            # raw would run its join+aggregate twice per iteration.
+            # Vertices missing from raw hold score exactly 0.0 and
+            # contribute nothing to the next join — the O(n) vertex
+            # left-join happens once, below the loop.
+            raw = r.checkpoint(
+                e.join(x, e.src == x.v)
+                .select(F.col("dst").alias("v"), F.col("x").alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("c")),
+                replaces=x,
+            )
+            norm = raw.agg(F.coalesce(F.sum("c"), F.lit(0.0)).alias("_n"))
+            x = raw.crossJoin(F.broadcast(norm)).select(
+                "v",
+                F.when(F.col("_n") > 0, F.col("c") / F.col("_n"))
+                .otherwise(F.lit(0.0))
+                .alias("x"),
+            )
+        return r.result(
+            vertices.join(x, on="v", how="left").select(
+                "v", F.coalesce(F.col("x"), F.lit(0.0)).alias("eigen")
+            )
         )
-        norm = raw.agg(F.coalesce(F.sum("c"), F.lit(0.0)).alias("_n"))
-        x = raw.crossJoin(F.broadcast(norm)).select(
-            "v",
-            F.when(F.col("_n") > 0, F.col("c") / F.col("_n"))
-            .otherwise(F.lit(0.0))
-            .alias("x"),
-        )
-    out = vertices.join(x, on="v", how="left").select(
-        "v", F.coalesce(F.col("x"), F.lit(0.0)).alias("eigen")
-    )
-    e.unpersist()
-    return out

@@ -29,7 +29,7 @@ hash partitioning). The window streams each vertex's neighbor list with
 spill — nothing materializes a hub's full neighbor array in one row
 (the collect_list formulation would). Rounds to fixpoint are bounded by
 the peeling depth of the graph (worst case O(n) on a path, tens on web
-graphs); lineage is cut every round.
+graphs); every round is one landscape_spark.rounds checkpoint.
 """
 
 from __future__ import annotations
@@ -38,6 +38,26 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from landscape_spark.graph.cc import symmetrize
+from landscape_spark.rounds import Rounds
+
+
+def _h_index(sym: DataFrame, state: DataFrame) -> DataFrame:
+    """(v, h): the H-index of each edge-incident vertex's neighbor values."""
+    w = Window.partitionBy("v").orderBy(F.desc("hw"))
+    msgs = sym.join(
+        state.select(F.col("v").alias("w"), F.col("h").alias("hw")), on="w"
+    ).select("v", "hw")
+    return (
+        msgs.withColumn("rn", F.row_number().over(w))
+        # hw desc-sorted, rn ascending: hw >= rn is prefix-closed, so
+        # the max satisfying rank IS the H-index of the neighbor values
+        .groupBy("v")
+        .agg(
+            F.max(F.when(F.col("hw") >= F.col("rn"), F.col("rn")).otherwise(0))
+            .cast("long")
+            .alias("h")
+        )
+    )
 
 
 def h_round(sym: DataFrame, state: DataFrame, vertices: DataFrame) -> DataFrame:
@@ -45,18 +65,7 @@ def h_round(sym: DataFrame, state: DataFrame, vertices: DataFrame) -> DataFrame:
     un-checkpointed so plan tests can pin the round's physical shape
     (one join exchange + one per-vertex window exchange; the aggregate
     rides the window's hash partitioning)."""
-    w = Window.partitionBy("v").orderBy(F.desc("hw"))
-    msgs = sym.join(
-        state.select(F.col("v").alias("w"), F.col("h").alias("hw")), on="w"
-    ).select("v", "hw")
-    new_h = (
-        msgs.withColumn("rn", F.row_number().over(w))
-        # hw desc-sorted, rn ascending: hw >= rn is prefix-closed, so
-        # the max satisfying rank IS the H-index of the neighbor values
-        .groupBy("v")
-        .agg(F.max(F.when(F.col("hw") >= F.col("rn"), F.col("rn")).otherwise(0)).alias("h"))
-    )
-    return vertices.join(new_h, on="v", how="left").select(
+    return vertices.join(_h_index(sym, state), on="v", how="left").select(
         "v", F.coalesce("h", F.lit(0)).cast("long").alias("h")
     )
 
@@ -72,69 +81,45 @@ def coreness(
     """
     import warnings
 
-    from pyspark.sql import Observation
-
     from landscape_spark.session import local_parallelism
 
-    w = Window.partitionBy("v").orderBy(F.desc("hw"))
-    # adjacency materialized once, partitioned on the MESSAGE key (w): each
-    # round's join then reuses the cached partitioning and only the
-    # vertex-sized state frame moves (guide §2.4)
-    sym = symmetrize(und_edges).repartition(
-        local_parallelism(und_edges.sparkSession), "w"
-    ).cache()
-    # the loop runs over edge-incident vertices only — every such vertex
-    # receives >= 1 message per round, so the aggregate's domain is stable
-    # and the per-round O(n) vertices left-join stays OUT of the loop;
-    # isolated vertices are constant core 0 and rejoin in the final select
-    # (the global cert sum is unchanged: isolated vertices contribute 0).
-    # the convergence certificate (global INTEGER sum — exact under any
-    # task-completion merge order) rides the checkpoint action itself via
-    # observe(), so no round pays a separate O(n)-scan certificate job
-    obs0 = Observation()
-    state = (
-        sym.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("h"))
-        .observe(obs0, F.sum("h").alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = obs0.get["s"]
-    converged = False
-    for _ in range(max_iter):
-        msgs = sym.join(
-            state.select(F.col("v").alias("w"), F.col("h").alias("hw")), on="w"
-        ).select("v", "hw")
-        obs = Observation()
-        state = (
-            msgs.withColumn("rn", F.row_number().over(w))
-            # hw desc-sorted, rn ascending: hw >= rn is prefix-closed, so
-            # the max satisfying rank IS the H-index of the neighbor values
-            .groupBy("v")
-            .agg(
-                F.max(
-                    F.when(F.col("hw") >= F.col("rn"), F.col("rn")).otherwise(0)
-                ).cast("long").alias("h")
+    with Rounds() as r:
+        # adjacency materialized once, partitioned on the MESSAGE key (w):
+        # each round's join then reuses the cached partitioning and only
+        # the vertex-sized state frame moves (guide §2.4)
+        sym = r.cache(
+            symmetrize(und_edges).repartition(local_parallelism(und_edges.sparkSession), "w")
+        )
+        # the loop runs over edge-incident vertices only — every such vertex
+        # receives >= 1 message per round, so the aggregate's domain is
+        # stable and the per-round O(n) vertices left-join stays OUT of the
+        # loop; isolated vertices are constant core 0 and rejoin in the
+        # final select (the global cert sum is unchanged: isolated vertices
+        # contribute 0). The convergence certificate (global INTEGER sum —
+        # exact under any task-completion merge order) rides each
+        # checkpoint action, so no round pays a separate certificate job.
+        state, m = r.observe(
+            sym.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("h")),
+            s=F.sum("h"),
+        )
+        for _ in range(max_iter):
+            prev_sum = m["s"]
+            state, m = r.observe(_h_index(sym, state), replaces=state, s=F.sum("h"))
+            if m["s"] == prev_sum:
+                break
+        else:
+            warnings.warn(
+                f"coreness did not converge within {max_iter} rounds — values "
+                "are still decreasing (upper bounds on the true coreness); "
+                "raise max_iter",
+                RuntimeWarning,
+                stacklevel=2,
             )
-            .observe(obs, F.sum("h").alias("s"))
-            .localCheckpoint(eager=True)
+        return r.result(
+            vertices.join(state, on="v", how="left").select(
+                "v", F.coalesce("h", F.lit(0)).cast("long").alias("core")
+            )
         )
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        warnings.warn(
-            f"coreness did not converge within {max_iter} rounds — values "
-            "are still decreasing (upper bounds on the true coreness); "
-            "raise max_iter",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    sym.unpersist()  # state is checkpointed
-    return vertices.join(state, on="v", how="left").select(
-        "v", F.coalesce("h", F.lit(0)).cast("long").alias("core")
-    )
 
 
 def k_core(

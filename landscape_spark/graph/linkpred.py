@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from landscape_spark.graph.cc import symmetrize
+from landscape_spark.rounds import Rounds
 
 
 def adamic_adar_topk(
@@ -183,7 +184,8 @@ def jaccard_lsh_topk(
     num_hashes, bands = int(num_hashes), int(bands)
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    sig = neighborhood_minhash(und_edges, num_hashes).localCheckpoint(eager=True)
+    # one checkpoint, read by the (lazy) result: a scope with nothing to release
+    sig = Rounds().checkpoint(neighborhood_minhash(und_edges, num_hashes))
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),

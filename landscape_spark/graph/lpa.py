@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from landscape_spark.graph.cc import symmetrize
+from landscape_spark.rounds import Rounds
 
 
 def label_propagation(
@@ -36,47 +37,46 @@ def label_propagation(
     label table is the loop's entire cross-iteration state, so a resumed
     run equals an uninterrupted one exactly (labels are integers)."""
     spark = und_edges.sparkSession
-    # cached (no repartition — labels broadcast while small, fan-out is
-    # linear): rounds re-read the adjacency without re-deriving the
-    # caller's edge plan (see connected_components_exact)
-    sym = symmetrize(und_edges).cache()
-    if start_labels is not None:
-        labels = start_labels.select("v", "label").localCheckpoint(eager=True)
-    else:
-        labels = vertices.select("v", F.col("v").alias("label")).localCheckpoint(
-            eager=True
-        )
     ckpt = None
     if checkpoint_dir is not None:
         from landscape_spark.checkpoint import RoundCheckpointer
 
         ckpt = RoundCheckpointer(spark, checkpoint_dir, "lpa")
     w = Window.partitionBy("v").orderBy(F.desc("cnt"), F.asc("label"))
-    for _it in range(start_iter, iters):
-        nbr_labels = sym.join(labels, sym.w == labels.v).select(
-            sym.v.alias("v"), "label"
-        )
-        best = (
-            nbr_labels.groupBy("v", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("v", F.col("label").alias("new_label"))
-        )
-        labels = (
-            labels.join(best, on="v", how="left")
-            .select("v", F.coalesce("new_label", "label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        if ckpt is not None and (_it + 1) % checkpoint_every == 0:
-            ckpt.save_round(
-                _it + 1,
-                {"labels": labels},
-                state={"iteration": _it + 1, "iters_total": iters},
-                metrics={},
+    with Rounds() as r:
+        # cached (no repartition — labels broadcast while small, fan-out is
+        # linear): rounds re-read the adjacency without re-deriving the
+        # caller's edge plan (see connected_components_exact)
+        sym = r.cache(symmetrize(und_edges))
+        if start_labels is not None:
+            labels = r.checkpoint(start_labels.select("v", "label"))
+        else:
+            labels = r.checkpoint(vertices.select("v", F.col("v").alias("label")))
+        for _it in range(start_iter, iters):
+            nbr_labels = sym.join(labels, sym.w == labels.v).select(
+                sym.v.alias("v"), "label"
             )
-    sym.unpersist()  # labels are checkpointed
-    return labels
+            best = (
+                nbr_labels.groupBy("v", "label")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select("v", F.col("label").alias("new_label"))
+            )
+            labels = r.checkpoint(
+                labels.join(best, on="v", how="left").select(
+                    "v", F.coalesce("new_label", "label").alias("label")
+                ),
+                replaces=labels,
+            )
+            if ckpt is not None and (_it + 1) % checkpoint_every == 0:
+                ckpt.save_round(
+                    _it + 1,
+                    {"labels": labels},
+                    state={"iteration": _it + 1, "iters_total": iters},
+                    metrics={},
+                )
+        return r.result(labels)
 
 
 def seeded_label_propagation(
@@ -98,42 +98,35 @@ def seeded_label_propagation(
     until the wave reaches it. Returns (v, label) with label NULL for
     vertices no seed can reach. Same per-round plan shape as
     label_propagation (one count shuffle + a per-vertex window)."""
-    seeds = seed_labels.select(
-        "v", F.col("label").alias("seed_label")
-    ).localCheckpoint(eager=True)
-    sym = symmetrize(und_edges).cache()
-    labels = (
-        vertices.join(seeds, on="v", how="left")
-        .select("v", F.col("seed_label").alias("label"))
-        .localCheckpoint(eager=True)
-    )
     w = Window.partitionBy("v").orderBy(F.desc("cnt"), F.asc("label"))
-    for _ in range(iters):
-        nbr_labels = (
-            sym.join(labels, sym.w == labels.v)
-            .where(F.col("label").isNotNull())
-            .select(sym.v.alias("v"), "label")
-        )
-        best = (
-            nbr_labels.groupBy("v", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("v", F.col("label").alias("new_label"))
-        )
-        labels = (
-            labels.join(best, on="v", how="left")
-            .join(seeds, on="v", how="left")
-            .select(
-                "v",
-                F.coalesce(
-                    "seed_label", "new_label", "label"
-                ).alias("label"),
+    with Rounds() as r:
+        seeds = r.checkpoint(seed_labels.select("v", F.col("label").alias("seed_label")))
+        sym = r.cache(symmetrize(und_edges))
+        labels = r.checkpoint(
+            vertices.join(seeds, on="v", how="left").select(
+                "v", F.col("seed_label").alias("label")
             )
-            .localCheckpoint(eager=True)
         )
-    sym.unpersist()  # labels are checkpointed
-    return labels
+        for _ in range(iters):
+            nbr_labels = (
+                sym.join(labels, sym.w == labels.v)
+                .where(F.col("label").isNotNull())
+                .select(sym.v.alias("v"), "label")
+            )
+            best = (
+                nbr_labels.groupBy("v", "label")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select("v", F.col("label").alias("new_label"))
+            )
+            labels = r.checkpoint(
+                labels.join(best, on="v", how="left")
+                .join(seeds, on="v", how="left")
+                .select("v", F.coalesce("seed_label", "new_label", "label").alias("label")),
+                replaces=labels,
+            )
+        return r.result(labels)
 
 
 def resume_label_propagation(

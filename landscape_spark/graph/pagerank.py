@@ -19,8 +19,8 @@ plain filtered aggregate of the checkpointed ranks (a 1-row broadcast), with
 NO per-iteration O(n) join or broadcast anywhere in the loop (at 10^9
 vertices a per-iteration vertex-set broadcast is a driver OOM). Each
 LINEAGE BATCH (lineage_every iterations; 1 on work-bound graphs) is one
-eager job (the localCheckpoint) containing one shuffle per iteration (the
-contrib groupBy).
+eager job (a landscape_spark.rounds checkpoint, releasing the one it
+replaces) containing one shuffle per iteration (the contrib groupBy).
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.rounds import Rounds
 from landscape_spark.session import local_parallelism
 
 
@@ -98,129 +99,124 @@ def pagerank(
         )
         edges = edges.withColumn("_w", F.col(weight_col).cast("double"))
         ew_cols = ["src", "dst", "_w", "out_deg"]
-    ew = (
-        edges.join(deg, on="src")
-        .select(*ew_cols)
-        .repartition(num_part, "src")
-        .cache()
-    )
-    n_edges = ew.count()  # materialize once; every iteration reuses this partitioning
+    with Rounds() as r:
+        ew = r.cache(edges.join(deg, on="src").select(*ew_cols).repartition(num_part, "src"))
+        n_edges = ew.count()  # materialize once; every iteration reuses this partitioning
 
-    # static dangling flag: outdeg(v) = 0. Computed ONCE, carried through the
-    # rank table so the per-iteration dangling mass is a filtered sum of
-    # ranks — never a join against a vertex-sized side.
-    vstate = (
-        vertices.join(
-            deg.select(F.col("src").alias("v"), F.lit(True).alias("_o")),
-            on="v",
-            how="left",
+        # static dangling flag: outdeg(v) = 0. Computed ONCE, carried through the
+        # rank table so the per-iteration dangling mass is a filtered sum of
+        # ranks — never a join against a vertex-sized side.
+        vstate = r.checkpoint(
+            vertices.join(
+                deg.select(F.col("src").alias("v"), F.lit(True).alias("_o")),
+                on="v",
+                how="left",
+            ).select("v", F.col("_o").isNull().alias("is_dang"))
         )
-        .select("v", F.col("_o").isNull().alias("is_dang"))
-        .localCheckpoint(eager=True)
-    )
-    if start_ranks is not None:
-        ranks = start_ranks.select("v", "r", "is_dang").localCheckpoint(eager=True)
-    else:
-        ranks = vstate.select(
-            "v", F.lit(1.0 / n).alias("r"), "is_dang"
-        ).localCheckpoint(eager=True)
-
-    ckpt = None
-    if checkpoint_dir is not None:
-        from landscape_spark.checkpoint import RoundCheckpointer
-
-        ckpt = RoundCheckpointer(spark, checkpoint_dir, "pagerank")
-
-    import time as _time
-
-    if lineage_every is None:
-        # driver-overhead-bound regime (sub-second iterations): batch 2
-        # iterations per action; work-bound regime: cut every iteration.
-        # With durable checkpoints the auto path stays at 1 — a batch size
-        # that doesn't divide checkpoint_every would make every parquet
-        # save re-execute the uncut tail (the docstring's own warning).
-        lineage_every = (
-            2 if (n_edges < 1_000_000 and checkpoint_dir is None) else 1
-        )
-    if tol is not None:
-        lineage_every = 1
-    # clamp: each un-cut iteration references the previous lazy rank plan
-    # TWICE (contrib join + dangling scan), so the logical plan grows ~2^B
-    # between cuts — B=10 would hand Catalyst a ~1000-node plan per
-    # analysis pass (values stay correct; optimizer time explodes). The
-    # auto path caps B at 2; caller-supplied values clamp to 4.
-    lineage_every = max(1, min(int(lineage_every), 4))
-
-    share = (
-        F.col("r") / F.col("out_deg")
-        if weight_col is None
-        else F.col("r") * F.col("_w") / F.col("out_deg")
-    )
-    for _it in range(start_iter, iters):
-        contrib = (
-            ew.join(ranks, ew.src == ranks.v)
-            .select(F.col("dst").alias("v"), share.alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("c"))
-        )
-        # dangling mass as a 1-row DF folded into the plan (no driver
-        # collect; this side is a scan of the previous rank state — no
-        # join, no O(n) exchange. On lineage-batched iterations the scan's
-        # sub-plan shares its exchanges with the main side, so the work
-        # still happens once per iteration.)
-        dangling_df = ranks.where("is_dang").agg(
-            F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang")
-        )
-        new_ranks = (
-            vstate.join(contrib, on="v", how="left")
-            .crossJoin(F.broadcast(dangling_df))
-            .select(
-                "v",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("_dang") / F.lit(n))
-                ).alias("r"),
-                "is_dang",
-            )
-        )
-        # lineage cut: an EAGER action only every lineage_every iterations
-        # (and always on the last) — intermediate iterations stay lazy, so
-        # a batch of B iterations is ONE Spark action whose B contrib
-        # exchanges each execute once (exchange reuse inside the action
-        # dedups the dangling sub-plans). Cuts per-iteration driver
-        # scheduling + block-materialization fixed costs ~B-fold at small
-        # inputs without changing any value.
-        if (_it + 1 - start_iter) % lineage_every == 0 or _it == iters - 1:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-        if tol is not None:
-            delta = (
-                new_ranks.join(
-                    ranks.select("v", F.col("r").alias("r_old")), on="v"
-                )
-                .agg(F.max(F.abs(F.col("r") - F.col("r_old"))))
-                .first()[0]
-            )
-            ranks = new_ranks
-            if delta < tol:
-                break
+        if start_ranks is not None:
+            ranks = r.checkpoint(start_ranks.select("v", "r", "is_dang"))
         else:
-            ranks = new_ranks
-        if ckpt is not None and (_it + 1) % checkpoint_every == 0:
-            _t0 = _time.time()
-            ckpt.save_round(
-                _it + 1,
-                {"ranks": ranks},
-                state={
-                    "iteration": _it + 1,
-                    "iters_total": iters,
-                    "n_vertices": n_vertices,
-                    "damping": damping,
-                },
-                metrics={"iter_wall_ts": _t0},
+            ranks = r.checkpoint(vstate.select("v", F.lit(1.0 / n).alias("r"), "is_dang"))
+        held = ranks  # the last checkpointed rank table
+
+        ckpt = None
+        if checkpoint_dir is not None:
+            from landscape_spark.checkpoint import RoundCheckpointer
+
+            ckpt = RoundCheckpointer(spark, checkpoint_dir, "pagerank")
+
+        import time as _time
+
+        if lineage_every is None:
+            # driver-overhead-bound regime (sub-second iterations): batch 2
+            # iterations per action; work-bound regime: cut every iteration.
+            # With durable checkpoints the auto path stays at 1 — a batch size
+            # that doesn't divide checkpoint_every would make every parquet
+            # save re-execute the uncut tail (the docstring's own warning).
+            lineage_every = (
+                2 if (n_edges < 1_000_000 and checkpoint_dir is None) else 1
             )
-    ew.unpersist()
-    return ranks.select("v", F.col("r").alias("pr_score"))
+        if tol is not None:
+            lineage_every = 1
+        # clamp: each un-cut iteration references the previous lazy rank plan
+        # TWICE (contrib join + dangling scan), so the logical plan grows ~2^B
+        # between cuts — B=10 would hand Catalyst a ~1000-node plan per
+        # analysis pass (values stay correct; optimizer time explodes). The
+        # auto path caps B at 2; caller-supplied values clamp to 4.
+        lineage_every = max(1, min(int(lineage_every), 4))
+
+        share = (
+            F.col("r") / F.col("out_deg")
+            if weight_col is None
+            else F.col("r") * F.col("_w") / F.col("out_deg")
+        )
+        for _it in range(start_iter, iters):
+            contrib = (
+                ew.join(ranks, ew.src == ranks.v)
+                .select(F.col("dst").alias("v"), share.alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("c"))
+            )
+            # dangling mass as a 1-row DF folded into the plan (no driver
+            # collect; this side is a scan of the previous rank state — no
+            # join, no O(n) exchange. On lineage-batched iterations the scan's
+            # sub-plan shares its exchanges with the main side, so the work
+            # still happens once per iteration.)
+            dangling_df = ranks.where("is_dang").agg(
+                F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang")
+            )
+            new_ranks = (
+                vstate.join(contrib, on="v", how="left")
+                .crossJoin(F.broadcast(dangling_df))
+                .select(
+                    "v",
+                    (
+                        F.lit((1.0 - damping) / n)
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("c"), F.lit(0.0)) + F.col("_dang") / F.lit(n))
+                    ).alias("r"),
+                    "is_dang",
+                )
+            )
+            # lineage cut: an EAGER action only every lineage_every iterations
+            # (and always on the last) — intermediate iterations stay lazy, so
+            # a batch of B iterations is ONE Spark action whose B contrib
+            # exchanges each execute once (exchange reuse inside the action
+            # dedups the dangling sub-plans). Cuts per-iteration driver
+            # scheduling + block-materialization fixed costs ~B-fold at small
+            # inputs without changing any value.
+            cut = (_it + 1 - start_iter) % lineage_every == 0 or _it == iters - 1
+            if cut:
+                new_ranks = r.checkpoint(new_ranks)
+            delta = None
+            if tol is not None:
+                delta = (
+                    new_ranks.join(
+                        ranks.select("v", F.col("r").alias("r_old")), on="v"
+                    )
+                    .agg(F.max(F.abs(F.col("r") - F.col("r_old"))))
+                    .first()[0]
+                )
+            if cut:
+                r.release(held)
+                held = new_ranks
+            ranks = new_ranks
+            if delta is not None and delta < tol:
+                break
+            if ckpt is not None and (_it + 1) % checkpoint_every == 0:
+                _t0 = _time.time()
+                ckpt.save_round(
+                    _it + 1,
+                    {"ranks": ranks},
+                    state={
+                        "iteration": _it + 1,
+                        "iters_total": iters,
+                        "n_vertices": n_vertices,
+                        "damping": damping,
+                    },
+                    metrics={"iter_wall_ts": _t0},
+                )
+        return r.result(ranks.select("v", F.col("r").alias("pr_score")))
 
 
 def resume_pagerank(
@@ -288,57 +284,50 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank needs a non-empty seed set")
     n_part = local_parallelism(edges.sparkSession)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    ew = (
-        edges.join(deg, on="src")
-        .select("src", "dst", "out_deg")
-        .repartition(n_part, "src")
-        .cache()
-    )
-    ew.count()
+    with Rounds() as r:
+        ew = r.cache(
+            edges.join(deg, on="src").select("src", "dst", "out_deg").repartition(n_part, "src")
+        )
+        ew.count()
 
-    p_col = F.when(
-        F.col("v").isin([int(s) for s in seeds]), F.lit(1.0 / len(seeds))
-    ).otherwise(F.lit(0.0))
-    vstate = (
-        vertices.join(
-            deg.select(F.col("src").alias("v"), F.lit(True).alias("_o")),
-            on="v",
-            how="left",
+        p_col = F.when(
+            F.col("v").isin([int(s) for s in seeds]), F.lit(1.0 / len(seeds))
+        ).otherwise(F.lit(0.0))
+        vstate = r.checkpoint(
+            vertices.join(
+                deg.select(F.col("src").alias("v"), F.lit(True).alias("_o")),
+                on="v",
+                how="left",
+            ).select("v", p_col.alias("p"), F.col("_o").isNull().alias("is_dang"))
         )
-        .select("v", p_col.alias("p"), F.col("_o").isNull().alias("is_dang"))
-        .localCheckpoint(eager=True)
-    )
-    ranks = vstate.select("v", F.col("p").alias("r"), "p", "is_dang").localCheckpoint(
-        eager=True
-    )
+        ranks = r.checkpoint(vstate.select("v", F.col("p").alias("r"), "p", "is_dang"))
 
-    for _ in range(iters):
-        contrib = (
-            ew.join(ranks, ew.src == ranks.v)
-            .select(F.col("dst").alias("v"), (F.col("r") / F.col("out_deg")).alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("c"))
-        )
-        dangling_df = ranks.where("is_dang").agg(
-            F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang")
-        )
-        ranks = (
-            vstate.join(contrib, on="v", how="left")
-            .crossJoin(F.broadcast(dangling_df))
-            .select(
-                "v",
-                (
-                    F.lit(1.0 - damping) * F.col("p")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.col("_dang") * F.col("p")
-                    )
-                ).alias("r"),
-                "p",
-                "is_dang",
+        for _ in range(iters):
+            contrib = (
+                ew.join(ranks, ew.src == ranks.v)
+                .select(F.col("dst").alias("v"), (F.col("r") / F.col("out_deg")).alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("c"))
             )
-            .localCheckpoint(eager=True)
-        )
-    ew.unpersist()
-    return ranks.select("v", F.col("r").alias("ppr_score"))
+            dangling_df = ranks.where("is_dang").agg(
+                F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang")
+            )
+            ranks = r.checkpoint(
+                vstate.join(contrib, on="v", how="left")
+                .crossJoin(F.broadcast(dangling_df))
+                .select(
+                    "v",
+                    (
+                        F.lit(1.0 - damping) * F.col("p")
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("c"), F.lit(0.0))
+                            + F.col("_dang") * F.col("p")
+                        )
+                    ).alias("r"),
+                    "p",
+                    "is_dang",
+                ),
+                replaces=ranks,
+            )
+        return r.result(ranks.select("v", F.col("r").alias("ppr_score")))

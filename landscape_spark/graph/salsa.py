@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.rounds import Rounds
 from landscape_spark.session import local_parallelism
 
 
@@ -57,64 +58,62 @@ def salsa(
     # single src-partitioned copy forced a full edge re-shuffle on every
     # dst-keyed half-step (10 per walk). Each copy carries only the 3
     # columns its half-steps read (project before the exchange, guide §2.3).
-    ew_dst = ew.select("dst", "src", "indeg").repartition(p, "dst").cache()
-    ew_src = ew.select("src", "dst", "outdeg").repartition(p, "src").cache()
-    ew_dst.count()
-    ew_src.count()
+    with Rounds() as r:
+        ew_dst = r.cache(ew.select("dst", "src", "indeg").repartition(p, "dst"))
+        ew_src = r.cache(ew.select("src", "dst", "outdeg").repartition(p, "src"))
+        ew_dst.count()
+        ew_src.count()
 
-    def _walk(score_e, score_key: str, back_e, back_key: str,
-              back_deg: str, fwd_deg: str):
-        """One conserved two-hop walk iterated ``iters`` times; returns the
-        final score frame (v, s) over the walkable side. score_e is
-        partitioned on score_key, back_e on back_key."""
-        side = score_e.select(F.col(score_key).alias("v")).distinct()
-        n_side = side.count()
-        s = side.select(
-            "v", F.lit(1.0 / float(n_side)).alias("s")
-        ).localCheckpoint(eager=True)
-        for _ in range(iters):
-            back = (
-                score_e.join(s, score_e[score_key] == s.v)
-                .select(
-                    F.col(back_key).alias("u"),
-                    (F.col("s") / F.col(back_deg)).alias("c"),
-                )
-                .groupBy("u")
-                .agg(F.sum("c").alias("b"))
-            )
-            s = (
-                back_e.join(back, back_e[back_key] == back.u)
-                .select(
-                    F.col(score_key).alias("v"),
-                    (F.col("b") / F.col(fwd_deg)).alias("c"),
-                )
-                .groupBy("v")
-                .agg(F.sum("c").alias("s"))
-                .localCheckpoint(eager=True)
-            )
-        return s
+        def _walk(score_e, score_key: str, back_e, back_key: str,
+                  back_deg: str, fwd_deg: str):
+            """One conserved two-hop walk iterated ``iters`` times; returns
+            the final score frame (v, s) over the walkable side. score_e is
+            partitioned on score_key, back_e on back_key."""
+            with Rounds(r) as w:
+                side = score_e.select(F.col(score_key).alias("v")).distinct()
+                n_side = side.count()
+                s = w.checkpoint(side.select("v", F.lit(1.0 / float(n_side)).alias("s")))
+                for _ in range(iters):
+                    back = (
+                        score_e.join(s, score_e[score_key] == s.v)
+                        .select(
+                            F.col(back_key).alias("u"),
+                            (F.col("s") / F.col(back_deg)).alias("c"),
+                        )
+                        .groupBy("u")
+                        .agg(F.sum("c").alias("b"))
+                    )
+                    s = w.checkpoint(
+                        back_e.join(back, back_e[back_key] == back.u)
+                        .select(
+                            F.col(score_key).alias("v"),
+                            (F.col("b") / F.col(fwd_deg)).alias("c"),
+                        )
+                        .groupBy("v")
+                        .agg(F.sum("c").alias("s")),
+                        replaces=s,
+                    )
+                return w.result(s)
 
-    # the two walks are independent: overlap them so the second walk's tasks
-    # back-fill executors freed by the first walk's stragglers (guide §2.6;
-    # job descriptions and results are per-thread, values unchanged)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_auth = pool.submit(
-            _walk, ew_dst, "dst", ew_src, "src", "indeg", "outdeg"
+        # the two walks are independent: overlap them so the second walk's
+        # tasks back-fill executors freed by the first walk's stragglers
+        # (guide §2.6; job descriptions and results are per-thread, values
+        # unchanged)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            fut_auth = pool.submit(
+                _walk, ew_dst, "dst", ew_src, "src", "indeg", "outdeg"
+            )
+            fut_hub = pool.submit(
+                _walk, ew_src, "src", ew_dst, "dst", "outdeg", "indeg"
+            )
+            auth = fut_auth.result()
+            hub = fut_hub.result()
+        return r.result(
+            vertices.join(auth.select("v", F.col("s").alias("authority")), on="v", how="left")
+            .join(hub.select("v", F.col("s").alias("hub")), on="v", how="left")
+            .select(
+                "v",
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+            )
         )
-        fut_hub = pool.submit(
-            _walk, ew_src, "src", ew_dst, "dst", "outdeg", "indeg"
-        )
-        auth = fut_auth.result()
-        hub = fut_hub.result()
-    out = (
-        vertices.join(auth.select("v", F.col("s").alias("authority")), on="v", how="left")
-        .join(hub.select("v", F.col("s").alias("hub")), on="v", how="left")
-        .select(
-            "v",
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-        )
-    )
-    ew_dst.unpersist()
-    ew_src.unpersist()
-    return out

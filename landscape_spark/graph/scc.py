@@ -37,17 +37,18 @@ by the depth of the SCC condensation DAG that survives trimming.
 Scale notes: all state is vertex-partitioned DataFrames; per inner round
 one shuffle for the message join plus the min/distinct aggregate. The
 remaining-graph edge relation is re-derived by semi-join each outer
-round and checkpointed, so lineage stays O(1) across the nested loops.
+round and checkpointed, so lineage stays O(1) across the nested loops;
+every checkpoint is a landscape_spark.rounds round, released once replaced.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpoint(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+from landscape_spark.rounds import Rounds
 
 
 def strongly_connected_components(
@@ -61,163 +62,141 @@ def strongly_connected_components(
     the undirected CC operators). edges: (src, dst); vertices: (v)."""
     import warnings
 
-    remaining = _checkpoint(vertices.select("v"))
-    edges_rem = _checkpoint(edges.select("src", "dst"))
-    assigned: list[DataFrame] = []
-
-    from pyspark.sql import Observation
-
-    for _outer in range(max_outer):
-        # --- 1. trim singleton SCCs (in-deg 0 or out-deg 0) to fixpoint ---
-        n_remaining = None
-        while True:
-            # one endpoint-flag aggregate replaces the two distinct passes:
-            # a vertex survives iff it occurs as BOTH a src and a dst
-            keep_v = (
-                edges_rem.select(F.col("src").alias("v"), F.lit(1).alias("o"), F.lit(0).alias("i"))
-                .unionAll(
-                    edges_rem.select(F.col("dst").alias("v"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+    count = F.count(F.lit(1))
+    with Rounds() as r:
+        remaining = r.checkpoint(vertices.select("v"))
+        edges_rem = r.checkpoint(edges.select("src", "dst"))
+        assigned: list[DataFrame] = []
+        for _outer in range(max_outer):
+            # --- 1. trim singleton SCCs (in-deg 0 or out-deg 0) to fixpoint ---
+            while True:
+                # one endpoint-flag aggregate replaces the two distinct
+                # passes: a vertex survives iff it occurs as BOTH a src and
+                # a dst
+                keep_v = (
+                    edges_rem.select(F.col("src").alias("v"), F.lit(1).alias("o"), F.lit(0).alias("i"))
+                    .unionAll(
+                        edges_rem.select(F.col("dst").alias("v"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+                    )
+                    .groupBy("v")
+                    .agg(F.max("o").alias("o"), F.max("i").alias("i"))
+                    .where((F.col("o") == 1) & (F.col("i") == 1))
+                    .select("v")
                 )
-                .groupBy("v")
-                .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-                .where((F.col("o") == 1) & (F.col("i") == 1))
-                .select("v")
-            )
-            # emptiness probes ride the checkpoint actions via observe()
-            obs_k, obs_t = Observation(), Observation()
-            keep = _checkpoint(
-                remaining.join(keep_v, on="v", how="left_semi").observe(
-                    obs_k, F.count(F.lit(1)).alias("n")
+                # emptiness probes ride the checkpoint actions
+                keep, m_keep = r.observe(
+                    remaining.join(keep_v, on="v", how="left_semi"), n=count
                 )
-            )
-            trimmed = _checkpoint(
-                remaining.join(keep, on="v", how="left_anti").observe(
-                    obs_t, F.count(F.lit(1)).alias("n")
+                trimmed, m_trim = r.observe(
+                    remaining.join(keep, on="v", how="left_anti"), n=count
                 )
-            )
-            n_remaining = obs_k.get["n"]
-            if obs_t.get["n"] == 0:
+                if m_trim["n"] == 0:
+                    r.release(keep, trimmed)  # keep == remaining
+                    break
+                assigned.append(trimmed.select("v", F.col("v").alias("comp")))
+                r.release(remaining)
+                remaining = keep
+                # shrink against the (typically small) TRIMMED set — an
+                # anti-join Catalyst broadcasts when it fits, instead of two
+                # semi-joins against the n-sized keep set
+                edges_rem = r.checkpoint(
+                    edges_rem.join(
+                        trimmed.withColumnRenamed("v", "src"), on="src", how="left_anti"
+                    ).join(trimmed.withColumnRenamed("v", "dst"), on="dst", how="left_anti"),
+                    replaces=edges_rem,
+                )
+            if m_keep["n"] == 0:
                 break
-            assigned.append(trimmed.select("v", F.col("v").alias("comp")))
-            remaining = keep
-            # shrink against the (typically small) TRIMMED set — an
-            # anti-join Catalyst broadcasts when it fits, instead of two
-            # semi-joins against the n-sized keep set
-            edges_rem = _checkpoint(
+
+            # NOTE measured, kept plain: materializing orientation-
+            # partitioned cached copies of edges_rem per outer round benched
+            # +10% at sf0.1 — the color/frontier side broadcasts while it
+            # fits, so the two cache-building exchanges bought nothing per
+            # inner round
+
+            # --- 2. forward coloring: color(v) = min id reaching v ---
+            # the certificate (INTEGER color sum — exact under any task
+            # merge order) rides each checkpoint action
+            colors, m = r.observe(
+                remaining.select("v", F.col("v").alias("color")), s=F.sum("color")
+            )
+            for _ in range(max_label_iter):
+                msgs = (
+                    edges_rem.join(colors.withColumnRenamed("v", "src"), on="src")
+                    .select(F.col("dst").alias("v"), "color")
+                    # color(u) <= u, so a message with color >= v can never
+                    # lower v's label — drop pre-shuffle (cc.py monotonicity)
+                    .where(F.col("color") < F.col("v"))
+                )
+                prev_sum = m["s"]
+                colors, m = r.observe(
+                    msgs.unionAll(colors).groupBy("v").agg(F.min("color").alias("color")),
+                    replaces=colors,
+                    s=F.sum("color"),
+                )
+                if m["s"] == prev_sum:
+                    break
+            else:
+                # un-converged colors make the backward mark under-approximate
+                # SCCs — not a silent wrong answer we are willing to return
+                raise RuntimeError(
+                    f"SCC forward coloring did not converge within "
+                    f"{max_label_iter} rounds; raise max_label_iter"
+                )
+
+            # --- 3. backward mark from roots within each color class ---
+            marked = r.checkpoint(
+                colors.where(F.col("color") == F.col("v")).select(
+                    "v", F.col("color").alias("comp")
+                )
+            )
+            frontier, new = marked, None
+            while True:
+                cand = (
+                    edges_rem.join(frontier.withColumnRenamed("v", "dst"), on="dst")
+                    .select(F.col("src").alias("v"), "comp")
+                    .join(colors, on="v")
+                    .where(F.col("color") == F.col("comp"))
+                    .select("v", "comp")
+                    .distinct()
+                )
+                new, m_new = r.observe(
+                    cand.join(marked.select("v"), on="v", how="left_anti"),
+                    replaces=new,
+                    n=count,
+                )
+                if m_new["n"] == 0:
+                    break
+                marked = r.checkpoint(marked.unionAll(new), replaces=marked)
+                frontier = new
+            r.release(new, colors)
+
+            # --- 4. assign the SCCs found this round and shrink the graph ---
+            assigned.append(marked)
+            remaining, m_rem = r.observe(
+                remaining.join(marked.select("v"), on="v", how="left_anti"),
+                replaces=remaining,
+                n=count,
+            )
+            if m_rem["n"] == 0:
+                break
+            # shrink against the small marked set (broadcastable), not the
+            # n-sized remaining set — same anti-join trick as the trim
+            edges_rem = r.checkpoint(
                 edges_rem.join(
-                    trimmed.withColumnRenamed("v", "src"), on="src", how="left_anti"
-                ).join(trimmed.withColumnRenamed("v", "dst"), on="dst", how="left_anti")
+                    marked.select(F.col("v").alias("src")), on="src", how="left_anti"
+                ).join(marked.select(F.col("v").alias("dst")), on="dst", how="left_anti"),
+                replaces=edges_rem,
             )
-        if n_remaining == 0:
-            break
-
-        # NOTE measured, kept plain: materializing orientation-partitioned
-        # cached copies of edges_rem per outer round benched +10% at sf0.1
-        # — the color/frontier side broadcasts while it fits, so the two
-        # cache-building exchanges bought nothing per inner round
-        e_src = edges_rem
-        e_dst = edges_rem
-
-        # --- 2. forward coloring: color(v) = min id reaching v ---
-        # the certificate (INTEGER color sum — exact under any task merge
-        # order) rides each checkpoint action via observe(): no separate
-        # per-round certificate job
-        from pyspark.sql import Observation
-
-        obs0 = Observation()
-        colors = _checkpoint(
-            remaining.select("v", F.col("v").alias("color")).observe(
-                obs0, F.sum("color").alias("s")
-            )
-        )
-        prev_sum = obs0.get["s"]
-        colors_converged = False
-        for _ in range(max_label_iter):
-            msgs = (
-                e_src.join(
-                    colors.withColumnRenamed("v", "src"), on="src"
-                )
-                .select(F.col("dst").alias("v"), "color")
-                # color(u) <= u, so a message with color >= v can never
-                # lower v's label — drop pre-shuffle (cc.py monotonicity)
-                .where(F.col("color") < F.col("v"))
-            )
-            obs = Observation()
-            colors = _checkpoint(
-                msgs.unionAll(colors)
-                .groupBy("v")
-                .agg(F.min("color").alias("color"))
-                .observe(obs, F.sum("color").alias("s"))
-            )
-            cur_sum = obs.get["s"]
-            if cur_sum == prev_sum:
-                colors_converged = True
-                break
-            prev_sum = cur_sum
-        if not colors_converged:
-            # un-converged colors make the backward mark under-approximate
-            # SCCs — not a silent wrong answer we are willing to return
-            raise RuntimeError(
-                f"SCC forward coloring did not converge within "
-                f"{max_label_iter} rounds; raise max_label_iter"
+        else:
+            warnings.warn(
+                f"strongly_connected_components hit max_outer={max_outer} with "
+                "vertices unassigned — the condensation DAG is deeper than the "
+                "round budget; raise max_outer",
+                RuntimeWarning,
+                stacklevel=2,
             )
 
-        # --- 3. backward mark from roots within each color class ---
-        marked = _checkpoint(
-            colors.where(F.col("color") == F.col("v")).select(
-                "v", F.col("color").alias("comp")
-            )
-        )
-        frontier = marked
-        while True:
-            cand = (
-                e_dst.join(frontier.withColumnRenamed("v", "dst"), on="dst")
-                .select(F.col("src").alias("v"), "comp")
-                .join(colors, on="v")
-                .where(F.col("color") == F.col("comp"))
-                .select("v", "comp")
-                .distinct()
-            )
-            obs_n = Observation()
-            new = _checkpoint(
-                cand.join(marked.select("v"), on="v", how="left_anti").observe(
-                    obs_n, F.count(F.lit(1)).alias("n")
-                )
-            )
-            if obs_n.get["n"] == 0:
-                break
-            marked = _checkpoint(marked.unionAll(new))
-            frontier = new
-
-        # --- 4. assign the SCCs found this round and shrink the graph ---
-        assigned.append(marked)
-        obs_r = Observation()
-        remaining = _checkpoint(
-            remaining.join(marked.select("v"), on="v", how="left_anti").observe(
-                obs_r, F.count(F.lit(1)).alias("n")
-            )
-        )
-        if obs_r.get["n"] == 0:
-            break
-        # shrink against the small marked set (broadcastable), not the
-        # n-sized remaining set — same anti-join trick as the trim
-        edges_rem = _checkpoint(
-            edges_rem.join(
-                marked.select(F.col("v").alias("src")), on="src", how="left_anti"
-            ).join(marked.select(F.col("v").alias("dst")), on="dst", how="left_anti")
-        )
-    else:
-        warnings.warn(
-            f"strongly_connected_components hit max_outer={max_outer} with "
-            "vertices unassigned — the condensation DAG is deeper than the "
-            "round budget; raise max_outer",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-
-    if not assigned:
-        return vertices.select("v", F.col("v").alias("comp")).limit(0)
-    out = assigned[0]
-    for df in assigned[1:]:
-        out = out.unionAll(df)
-    return out
+        if not assigned:
+            return vertices.select("v", F.col("v").alias("comp")).limit(0)
+        return r.result(reduce(DataFrame.unionAll, assigned))

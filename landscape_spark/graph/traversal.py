@@ -20,10 +20,10 @@ Scale notes per round: one shuffle for the frontier join (the frontier
 side is the small side — AQE broadcasts it while it fits, and web-graph
 frontiers peak at a few percent of n), one distinct on the candidate
 set, one anti-join against the visited table (hash-partitioned on v both
-times, so the exchange is reused). Lineage is cut every round
-(localCheckpoint) to keep the plan O(1); the loop terminates the first
-round the frontier comes back empty — `isEmpty` on the checkpointed
-frontier is O(1) jobs, not a full count.
+times, so the exchange is reused). Every round is one
+landscape_spark.rounds checkpoint (plan O(1)) whose row count rides the
+action; the loop terminates the first round the frontier comes back
+empty, and warns if its round cap stops it first.
 
 Unreached vertices are absent from the output (a left join against the
 vertex table is the caller's choice of NULL vs sentinel).
@@ -36,6 +36,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from landscape_spark.rounds import Rounds, warn_cap
+
 
 def bfs_distances(
     edges: DataFrame,
@@ -44,40 +46,46 @@ def bfs_distances(
 ) -> DataFrame:
     """Return (v, dist) — minimum hop count from any seed along DIRECTED
     edges (src, dst). Only reached vertices appear. max_iter bounds rounds
-    at the graph's seed eccentricity (web graphs: ~tens); hitting the cap
-    returns the correct ≤max_iter-hop ball, and distances in it are exact.
+    at the graph's seed eccentricity (web graphs: ~tens). Hitting the cap
+    while the last round still reached new vertices returns the
+    ≤max_iter-hop ball (its distances are exact) and raises a
+    RuntimeWarning, since vertices farther out are missing.
     """
-    from pyspark.sql import Observation
-
     spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in dict.fromkeys(seeds)], "v long, dist int"
-    ).localCheckpoint(eager=True)
-    frontier = dist.select("v")
-    for d in range(1, max_iter + 1):
-        candidates = (
-            edges.join(frontier.withColumnRenamed("v", "src"), on="src")
-            .select(F.col("dst").alias("v"))
-            .distinct()
+    with Rounds() as r:
+        dist = r.checkpoint(
+            spark.createDataFrame(
+                [(int(s), 0) for s in dict.fromkeys(seeds)], "v long, dist int"
+            )
         )
-        # the emptiness probe rides the checkpoint action via observe()
-        # (integer count — exact), saving one job per round
-        obs = Observation()
-        nxt = (
-            candidates.join(dist, on="v", how="left_anti")
-            .select("v", F.lit(d).cast("int").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if obs.get["n"] == 0:
-            break
-        # NOTE measured, kept: accumulating dist as a LAZY union of the
-        # checkpointed levels (no per-round copy) re-scans L fragments in
-        # every round's anti-join and benched +6% at sf0.1 — the
-        # consolidated re-checkpoint wins despite the extra job
-        dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("v")
-    return dist
+        frontier, nxt = dist.select("v"), None
+        for d in range(1, max_iter + 1):
+            candidates = (
+                edges.join(frontier.withColumnRenamed("v", "src"), on="src")
+                .select(F.col("dst").alias("v"))
+                .distinct()
+            )
+            # the emptiness probe rides the checkpoint action (integer
+            # count — exact), saving one job per round
+            new, m = r.observe(
+                candidates.join(dist, on="v", how="left_anti").select(
+                    "v", F.lit(d).cast("int").alias("dist")
+                ),
+                replaces=nxt,
+                n=F.count(F.lit(1)),
+            )
+            nxt = new
+            if m["n"] == 0:
+                break
+            # NOTE measured, kept: accumulating dist as a LAZY union of the
+            # checkpointed levels (no per-round copy) re-scans L fragments
+            # in every round's anti-join and benched +6% at sf0.1 — the
+            # consolidated re-checkpoint wins despite the extra job
+            dist = r.checkpoint(dist.unionAll(nxt), replaces=dist)
+            frontier = nxt.select("v")
+        else:
+            warn_cap("bfs_distances", "max_iter", max_iter)
+        return r.result(dist)
 
 
 def sssp_weighted(
@@ -99,44 +107,46 @@ def sssp_weighted(
     in practice a few rounds past the hop eccentricity). Per round: one
     frontier-sized join + a min-aggregate + one join against the distance
     table; lineage cut per round. Terminates exactly when no distance
-    improves (empty frontier)."""
+    improves (empty frontier); hitting ``max_iter`` while distances still
+    improve raises a RuntimeWarning (the distances are upper bounds)."""
     spark = edges.sparkSession
     ew = edges.select(
         "src", "dst", F.col(weight_col).cast("long").alias("_w")
     )
-    dist = spark.createDataFrame(
-        [(int(s), 0) for s in dict.fromkeys(seeds)], "v long, dist long"
-    ).localCheckpoint(eager=True)
-    from pyspark.sql import Observation
-
-    frontier = dist
-    for _ in range(max_iter):
-        cand = (
-            ew.join(
-                frontier.select(
-                    F.col("v").alias("src"), F.col("dist").alias("_d")
-                ),
-                on="src",
+    with Rounds() as r:
+        dist = r.checkpoint(
+            spark.createDataFrame(
+                [(int(s), 0) for s in dict.fromkeys(seeds)], "v long, dist long"
             )
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.min(F.col("_d") + F.col("_w")).alias("cand"))
         )
-        joined = cand.join(dist, on="v", how="left")
-        obs = Observation()
-        improved = (
-            joined.where(
-                F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
+        frontier, improved = dist, None
+        for _ in range(max_iter):
+            cand = (
+                ew.join(
+                    frontier.select(
+                        F.col("v").alias("src"), F.col("dist").alias("_d")
+                    ),
+                    on="src",
+                )
+                .groupBy(F.col("dst").alias("v"))
+                .agg(F.min(F.col("_d") + F.col("_w")).alias("cand"))
             )
-            .select("v", F.col("cand").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        if obs.get["n"] == 0:
-            break
-        dist = (
-            dist.join(improved.select("v"), on="v", how="left_anti")
-            .unionAll(improved)
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    return dist
+            joined = cand.join(dist, on="v", how="left")
+            new, m = r.observe(
+                joined.where(
+                    F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
+                ).select("v", F.col("cand").alias("dist")),
+                replaces=improved,
+                n=F.count(F.lit(1)),
+            )
+            improved = new
+            if m["n"] == 0:
+                break
+            dist = r.checkpoint(
+                dist.join(improved.select("v"), on="v", how="left_anti").unionAll(improved),
+                replaces=dist,
+            )
+            frontier = improved
+        else:
+            warn_cap("sssp_weighted", "max_iter", max_iter)
+        return r.result(dist)

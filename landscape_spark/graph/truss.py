@@ -16,8 +16,10 @@ canonical edges and aggregating.
 the surviving subgraph and deletes ALL under-threshold edges at once —
 deterministic (no tie-breaking), and the round count is O(peel depth),
 not O(edges). Per round: one triangle enumeration (two joins + an
-aggregate) + one semi-join + one count action for the fixpoint probe.
-Lineage is cut per round with an eager localCheckpoint, so round r never
+aggregate) + one semi-join whose survivor count, the fixpoint probe,
+rides the round's checkpoint action.
+Lineage is cut per round with an eager checkpoint (a landscape_spark.rounds
+round that releases the one it replaces), so round r never
 re-executes rounds 0..r-1.
 """
 
@@ -25,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from landscape_spark.rounds import Rounds
 
 from landscape_spark.graph.triangles import _oriented_by_degree
 
@@ -86,37 +90,32 @@ def k_truss(
     for pathologically deep peels; each round strictly shrinks the edge
     set until the fixpoint, so termination is guaranteed)."""
     k = int(k)
-
-    def _supp_round(e: DataFrame) -> DataFrame:
+    count = F.count(F.lit(1))
+    with Rounds() as r:
         # NOTE measured, kept recompute: caching the oriented relation for
         # the round's three references benched +18% at sf0.1 — the cache
         # materialization job costs more than two recomputes of the narrow
         # broadcast-join orientation over the checkpointed edge set
-        return edge_support(e).localCheckpoint(eager=True)
-
-    e = und_edges.select("a", "b").localCheckpoint(eager=True)
-    supp = _supp_round(e)
-    if k <= 2:
-        return supp
-    from pyspark.sql import Observation
-
-    n_prev = e.count()
-    for _ in range(max_rounds):
-        keep = supp.where(F.col("support") >= F.lit(k - 2)).select("a", "b")
-        # survivor count rides the checkpoint action (integer — exact)
-        obs = Observation()
-        e_new = keep.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        n_new = obs.get["n"]
-        if n_new == n_prev:
-            # nothing was deleted: supp is already the support within the
-            # surviving subgraph — exact fixpoint
-            return supp
-        e, n_prev = e_new, n_new
-        if n_new == 0:
-            return supp.where(F.lit(False))
-        supp = _supp_round(e)
+        e, m = r.observe(und_edges.select("a", "b"), n=count)
+        supp = r.checkpoint(edge_support(e))
+        if k <= 2:
+            return r.result(supp)
+        for _ in range(max_rounds):
+            # survivor count rides the checkpoint action (integer — exact)
+            n_prev = m["n"]
+            e_new, m = r.observe(
+                supp.where(F.col("support") >= F.lit(k - 2)).select("a", "b"),
+                replaces=e,
+                n=count,
+            )
+            if m["n"] == n_prev:
+                # nothing was deleted: supp is already the support within
+                # the surviving subgraph — exact fixpoint
+                return r.result(supp)
+            e = e_new
+            if m["n"] == 0:
+                return r.result(supp.where(F.lit(False)))
+            supp = r.checkpoint(edge_support(e), replaces=supp)
     raise RuntimeError(
         f"k_truss did not converge within {max_rounds} rounds"
     )

@@ -28,15 +28,19 @@ cached; each step resolves the hop rank with a vertex-keyed degree join,
 then fetches the chosen neighbor via an EQUI-join on (src, rank) — one
 matching adjacency row per walker, NO per-hub fan-out (see the in-loop
 comment for the 10^12-row failure mode the equi-key avoids). Lineage is
-cut per step.
+cut per step by a landscape_spark.rounds checkpoint; the step checkpoints
+are the result, and the adjacency caches are released on return.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from landscape_spark.rounds import Rounds
 from landscape_spark.session import local_parallelism
 
 # the public hop law — mirrored verbatim in the DuckDB oracle SQL
@@ -78,66 +82,53 @@ def random_walks(
     itself; walks truncate at dangling vertices)."""
     spark = edges.sparkSession
     p = local_parallelism(spark)
-    adj = ranked_adjacency(edges).repartition(p, "src", "rank").cache()
-    adj.count()
-    deg = adj.select("src", "out_deg").distinct().cache()
-    deg.count()
+    with Rounds() as r:
+        adj = r.cache(ranked_adjacency(edges).repartition(p, "src", "rank"))
+        adj.count()
+        deg = r.cache(adj.select("src", "out_deg").distinct())
+        deg.count()
 
-    state = vertices.select(
-        F.col("v").alias("start_v"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(int(walks_per_vertex) - 1))
-        ).alias("_wk"),
-    ).select(
-        "start_v",
-        F.col("_wk").cast("long").alias("walk"),
-        F.lit(0).alias("step"),
-        F.col("start_v").alias("v"),
-    )
-    state = state.localCheckpoint(eager=True)
-    levels = [state]
-    for t in range(1, int(walk_len) + 1):
-        walk_key = F.col("start_v") * F.lit(WALK_SHIFT) + F.col("walk")
-        h = _hop_rank(F.col("v"), t - 1, walk_key)
-        # resolve the hop rank BEFORE touching the adjacency, then fetch
-        # the chosen neighbor with an EQUI-join on (src, rank): joining on
-        # src alone and post-filtering the rank equation would fan each
-        # walker at a degree-D hub out to D intermediate rows — 10^6
-        # walkers parked on a 10^6-degree hub is a 10^12-row join. The
-        # degree lookup is a plain vertex-keyed hash join (no fan-out).
-        picked = (
-            state.join(deg, deg.src == state.v)
-            .select(
+        state = r.checkpoint(
+            vertices.select(
+                F.col("v").alias("start_v"),
+                F.explode(F.sequence(F.lit(0), F.lit(int(walks_per_vertex) - 1))).alias("_wk"),
+            ).select(
+                "start_v",
+                F.col("_wk").cast("long").alias("walk"),
+                F.lit(0).alias("step"),
+                F.col("start_v").alias("v"),
+            )
+        )
+        levels = [state]
+        for t in range(1, int(walk_len) + 1):
+            walk_key = F.col("start_v") * F.lit(WALK_SHIFT) + F.col("walk")
+            h = _hop_rank(F.col("v"), t - 1, walk_key)
+            # resolve the hop rank BEFORE touching the adjacency, then fetch
+            # the chosen neighbor with an EQUI-join on (src, rank): joining
+            # on src alone and post-filtering the rank equation would fan
+            # each walker at a degree-D hub out to D intermediate rows —
+            # 10^6 walkers parked on a 10^6-degree hub is a 10^12-row join.
+            # The degree lookup is a plain vertex-keyed hash join (no
+            # fan-out).
+            picked = state.join(deg, deg.src == state.v).select(
                 "start_v",
                 "walk",
                 F.col("v").alias("src"),
                 (h % F.col("out_deg")).alias("rank"),
             )
-        )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        nxt = (
-            picked.join(adj.select("src", "rank", "dst"), on=["src", "rank"])
-            .select(
-                "start_v",
-                "walk",
-                F.lit(t).alias("step"),
-                F.col("dst").alias("v"),
+            state, m = r.observe(
+                picked.join(adj.select("src", "rank", "dst"), on=["src", "rank"]).select(
+                    "start_v",
+                    "walk",
+                    F.lit(t).alias("step"),
+                    F.col("dst").alias("v"),
+                ),
+                n=F.count(F.lit(1)),
             )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        levels.append(nxt)
-        state = nxt
-        if obs.get["n"] == 0:
-            break
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionAll(lv)
-    adj.unpersist()
-    deg.unpersist()
-    return out
+            levels.append(state)
+            if m["n"] == 0:
+                break
+        return r.result(reduce(DataFrame.unionAll, levels))
 
 
 N2V_ADD = 777_767  # decouples the node2vec coin from the first-order hop law
@@ -184,89 +175,84 @@ def node2vec_walks(
     assert _pow2(float(p)) and _pow2(float(q)), "p and q must be powers of 2"
     spark = edges.sparkSession
     par = local_parallelism(spark)
-    adj = (
-        edges.select("src", "dst").repartition(par, "src").cache()
-    )
-    adj.count()
-    prev_edge = edges.select(
-        F.col("src").alias("prev"), F.col("dst").alias("w"), F.lit(1).alias("_cmn")
-    ).repartition(par, "prev").cache()
-    prev_edge.count()
-
-    state = vertices.select(
-        F.col("v").alias("start_v"),
-        F.explode(
-            F.sequence(F.lit(0), F.lit(int(walks_per_vertex) - 1))
-        ).alias("_wk"),
-    ).select(
-        "start_v",
-        F.col("_wk").cast("long").alias("walk"),
-        F.lit(0).alias("step"),
-        F.lit(-1).cast("long").alias("prev"),
-        F.col("start_v").alias("v"),
-    )
-    state = state.localCheckpoint(eager=True)
-    levels = [state.select("start_v", "walk", "step", "v")]
     w_cum = Window.partitionBy("start_v", "walk").orderBy("w").rowsBetween(
         Window.unboundedPreceding, 0
     )
     w_tot = Window.partitionBy("start_v", "walk")
     inv_p, inv_q = 1.0 / float(p), 1.0 / float(q)
-    for t in range(1, int(walk_len) + 1):
-        key = F.col("start_v") * F.lit(WALK_SHIFT) + F.col("walk")
-        u = (
-            (
-                (F.col("v") % F.lit(H_MOD)) * F.lit(H_V)
-                + F.lit((t - 1) * H_STEP)
-                + (key % F.lit(H_MOD)) * F.lit(H_WALK)
-                + F.lit(N2V_ADD)
-            )
-            % F.lit(H_MOD)
-        ).cast("double") / F.lit(float(H_MOD))
-        cand = (
-            state.join(adj, adj.src == state.v)
-            .select("start_v", "walk", "prev", "v", F.col("dst").alias("w"))
-            .join(prev_edge, on=["prev", "w"], how="left")
-            .select(
-                "start_v",
-                "walk",
-                "prev",
-                "v",
-                "w",
-                F.when(F.col("w") == F.col("prev"), F.lit(inv_p))
-                .when(F.col("_cmn").isNotNull(), F.lit(1.0))
-                .otherwise(F.lit(inv_q))
-                .alias("wt"),
-            )
+    with Rounds() as r:
+        adj = r.cache(edges.select("src", "dst").repartition(par, "src"))
+        adj.count()
+        prev_edge = r.cache(
+            edges.select(
+                F.col("src").alias("prev"), F.col("dst").alias("w"), F.lit(1).alias("_cmn")
+            ).repartition(par, "prev")
         )
-        picked = (
-            cand.withColumn("cum", F.sum("wt").over(w_cum))
-            .withColumn("tot", F.sum("wt").over(w_tot))
-            .withColumn("_u", u)
-            .where(
-                (F.col("_u") * F.col("tot") < F.col("cum"))
-                & (F.col("_u") * F.col("tot") >= F.col("cum") - F.col("wt"))
-            )
-        )
-        from pyspark.sql import Observation
+        prev_edge.count()
 
-        obs = Observation()
-        state = picked.select(
-            "start_v",
-            "walk",
-            F.lit(t).alias("step"),
-            F.col("v").alias("prev"),
-            F.col("w").alias("v"),
-        ).observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-        levels.append(state.select("start_v", "walk", "step", "v"))
-        if obs.get["n"] == 0:
-            break
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionAll(lv)
-    adj.unpersist()
-    prev_edge.unpersist()
-    return out
+        state = r.checkpoint(
+            vertices.select(
+                F.col("v").alias("start_v"),
+                F.explode(F.sequence(F.lit(0), F.lit(int(walks_per_vertex) - 1))).alias("_wk"),
+            ).select(
+                "start_v",
+                F.col("_wk").cast("long").alias("walk"),
+                F.lit(0).alias("step"),
+                F.lit(-1).cast("long").alias("prev"),
+                F.col("start_v").alias("v"),
+            )
+        )
+        levels = [state.select("start_v", "walk", "step", "v")]
+        for t in range(1, int(walk_len) + 1):
+            key = F.col("start_v") * F.lit(WALK_SHIFT) + F.col("walk")
+            u = (
+                (
+                    (F.col("v") % F.lit(H_MOD)) * F.lit(H_V)
+                    + F.lit((t - 1) * H_STEP)
+                    + (key % F.lit(H_MOD)) * F.lit(H_WALK)
+                    + F.lit(N2V_ADD)
+                )
+                % F.lit(H_MOD)
+            ).cast("double") / F.lit(float(H_MOD))
+            cand = (
+                state.join(adj, adj.src == state.v)
+                .select("start_v", "walk", "prev", "v", F.col("dst").alias("w"))
+                .join(prev_edge, on=["prev", "w"], how="left")
+                .select(
+                    "start_v",
+                    "walk",
+                    "prev",
+                    "v",
+                    "w",
+                    F.when(F.col("w") == F.col("prev"), F.lit(inv_p))
+                    .when(F.col("_cmn").isNotNull(), F.lit(1.0))
+                    .otherwise(F.lit(inv_q))
+                    .alias("wt"),
+                )
+            )
+            picked = (
+                cand.withColumn("cum", F.sum("wt").over(w_cum))
+                .withColumn("tot", F.sum("wt").over(w_tot))
+                .withColumn("_u", u)
+                .where(
+                    (F.col("_u") * F.col("tot") < F.col("cum"))
+                    & (F.col("_u") * F.col("tot") >= F.col("cum") - F.col("wt"))
+                )
+            )
+            state, m = r.observe(
+                picked.select(
+                    "start_v",
+                    "walk",
+                    F.lit(t).alias("step"),
+                    F.col("v").alias("prev"),
+                    F.col("w").alias("v"),
+                ),
+                n=F.count(F.lit(1)),
+            )
+            levels.append(state.select("start_v", "walk", "step", "v"))
+            if m["n"] == 0:
+                break
+        return r.result(reduce(DataFrame.unionAll, levels))
 
 
 def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:

@@ -81,11 +81,13 @@ def census_one(
     """Run one seeded Boruvka emulation; return (attempts, failures,
     rounds_used, budget).
 
-    batched=True emulates the PRODUCTION pass schedule of
-    boruvka._cc_rounds — 4 groups on the first pass, 2 thereafter, reserve
-    to 1 group per pass once the remaining budget is within
-    ceil(log2(live))+1 — with every group of a pass sampling the PASS-START
-    component state and unions applied in group order. This measures
+    batched=True emulates the PRODUCTION pass schedule of the Boruvka pass
+    loop (boruvka._boruvka_passes, which serves CC and every k-forest pass)
+    under its collect threshold — FIRST_PASS_GROUPS (4) groups on the first
+    pass, LATER_PASS_GROUPS (2) thereafter, reserve to 1 group per pass once
+    the remaining budget is within ceil(log2(live))+1 — with every group of
+    a pass sampling the PASS-START component state and unions applied in
+    group order. This measures
     worst-case group CONSUMPTION under the real schedule (which can exceed
     the classic one-group-per-round emulation), validating that the
     log2(n)+extra_rounds budget still converges."""

@@ -221,18 +221,16 @@ class SketchStreamIngestor:
             if slices is None:
                 vmap = self.spark.createDataFrame([], "v long, comp long")
             else:
-                vmap0 = slices.select(
-                    F.col("vid").alias("v"), F.col("vid").alias("comp")
-                ).localCheckpoint(eager=True)
+                # the pass loop builds the identity map and returns a
+                # checkpoint: nothing here needs re-materializing
                 vmap = _cc_rounds(
                     self.spark,
                     slices,
-                    vmap0,
+                    None,
                     self.params,
                     start_group=0,
                     num_partitions=self.num_partitions,
                 )
-            vmap = vmap.localCheckpoint(eager=True)
             self._cc_cache_version = self.batches_seen
             self._cc_cache_vmap = vmap
         if n_vertices > 0:
